@@ -8,7 +8,7 @@ have (buckets, salting).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 # sent_id encoding stride: sent_id = turn_idx * SENT_ID_STRIDE + 2*k.
@@ -35,9 +35,6 @@ class PipelineConfig:
     # join=' ' — refs_html_to_evidences.py:30-38)
     slide_window: int = 2
     slide_join: str = " "
-    # Arrow batch size for kernel stages (reference model batching:
-    # sentence_retrieval_module.py:13 → 32; evidence batch 256)
-    kernel_batch_rows: int = 4096
     # Scale machinery (ours): number of conv_id hash buckets used for
     # checkpoint manifests + output layout, and salt fan-out for hot keys.
     n_buckets: int = 32

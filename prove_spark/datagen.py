@@ -20,7 +20,7 @@ from datetime import datetime, timedelta, timezone
 
 import pandas as pd
 
-from .dictionaries import ALIASES, ENTITIES, HOT_QIDS, PREDICATES, qid_num
+from .dictionaries import ALIASES, ENTITIES, HOT_QIDS, PREDICATES
 
 _EPOCH = datetime(2026, 1, 1, tzinfo=timezone.utc)
 

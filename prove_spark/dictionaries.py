@@ -216,26 +216,6 @@ def sitelink_count(qid: str) -> int:
 SITELINKS: list[tuple[str, int]] = [(q, sitelink_count(q)) for q, _ in ENTITIES]
 
 
-def entities_pdf():
-    import pandas as pd
-
-    return pd.DataFrame(ENTITIES, columns=["qid", "label"])
-
-
-def aliases_pdf():
-    import pandas as pd
-
-    return pd.DataFrame(ALIASES, columns=["alias", "qid"])
-
-
-def predicates_pdf():
-    import pandas as pd
-
-    return pd.DataFrame(
-        PREDICATES, columns=["property_id", "pattern", "property_label", "datatype"]
-    )
-
-
 def qid_num(qid: str) -> int:
     return int(qid[1:])
 

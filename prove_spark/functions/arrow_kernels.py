@@ -36,8 +36,6 @@ import pandas as pd
 
 from . import text as K
 
-_TRANS = str.maketrans(K._NORMALIZE_MAP)
-
 
 # ---------------------------------------------------------------------------
 # Worker-global kernel state (guide §4.5: heavyweight/memoized state once per
@@ -101,8 +99,6 @@ def _worker_state() -> None:
 _B_TRANS = bytes(
     b if (48 <= b <= 57) or (97 <= b <= 122) else 32 for b in range(256)
 )
-_NOT = b"not"
-_NEVER = b"never"
 
 
 def _tok(v) -> frozenset:

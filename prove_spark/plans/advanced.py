@@ -391,30 +391,6 @@ FROM customer c, LATERAL (
 """
 
 
-def zorder_events(spark, sf_dir):
-    """Morton z-values over (user_id, coarse event time) — the clustering
-    key `operators/zorder.write_zordered` lays files out on so min/max file
-    skipping works for range predicates on EITHER dimension (a linear sort
-    answers only its leading key). Pure shift/mask integer arithmetic, all
-    whole-stage codegen; the DuckDB oracle runs the identical bit algebra.
-    y uses epoch_us >> 24 (~16.8 s buckets): the low bits of a timestamp are
-    noise that would shred z-locality. Layout benefit is pinned separately
-    in tests/test_zorder.py (per-file bounding boxes prune BOTH dims)."""
-    from ..operators.zorder import ZBITS, z_value
-
-    e = _t(spark, sf_dir, "events")
-    mask = (1 << ZBITS) - 1
-    epoch_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    x = F.col("user_id").bitwiseAND(F.lit(mask))
-    y = F.shiftright(epoch_us, 24).bitwiseAND(F.lit(mask))
-    return e.select(
-        "event_id",
-        x.alias("x"),
-        y.alias("y"),
-        z_value(F.col("user_id"), F.shiftright(epoch_us, 24)).alias("zval"),
-    )
-
-
 def fuzzy_part_matches(spark, sf_dir):
     """Fuzzy entity resolution — the approximate-string-match step a KG /
     catalog builder runs before canonicalization (the exact-key analog is
@@ -618,37 +594,6 @@ LEFT JOIN pit_b b
   ON b.user_id = p.user_id
  AND b.valid_from <= p.pts
  AND (b.valid_to IS NULL OR p.pts < b.valid_to)
-"""
-
-
-ZORDER_SQL = """
-WITH base AS (
-  SELECT event_id,
-         user_id & 65535 AS x,
-         (epoch_us(ts) >> 24) & 65535 AS y
-  FROM events
-), s1 AS (
-  SELECT event_id, x, y,
-         (x | (x << 8)) & 16711935 AS sx,
-         (y | (y << 8)) & 16711935 AS sy
-  FROM base
-), s2 AS (
-  SELECT event_id, x, y,
-         (sx | (sx << 4)) & 252645135 AS sx,
-         (sy | (sy << 4)) & 252645135 AS sy
-  FROM s1
-), s3 AS (
-  SELECT event_id, x, y,
-         (sx | (sx << 2)) & 858993459 AS sx,
-         (sy | (sy << 2)) & 858993459 AS sy
-  FROM s2
-), s4 AS (
-  SELECT event_id, x, y,
-         (sx | (sx << 1)) & 1431655765 AS sx,
-         (sy | (sy << 1)) & 1431655765 AS sy
-  FROM s3
-)
-SELECT event_id, x, y, (sx | (sy << 1)) AS zval FROM s4
 """
 
 
@@ -1946,10 +1891,9 @@ DEDUP_WINDOW_S = 3600  # tumbling dedup window (seconds)
 def dedup_time_window(spark, sf_dir):
     """Windowed event deduplication — the at-least-once-ingestion
     idempotency op (retried producers emit the same logical event twice;
-    keep ONE per (user, type) per tumbling hour) and the BATCH twin of the
-    streaming lane's dropDuplicatesWithinWatermark
-    (streaming/ingest.py): first event per (user_id, event_type,
-    hour bucket) by (ts, event_id) survives, with the duplicate count it
+    keep ONE per (user, type) per tumbling hour) and the BATCH form of a
+    streaming dropDuplicatesWithinWatermark: first event per (user_id,
+    event_type, hour bucket) by (ts, event_id) survives, with the duplicate count it
     absorbed riding along.
 
     Scale shape: ONE window whose partition key includes the time bucket —
@@ -2246,7 +2190,6 @@ ADVANCED_QUERIES: dict[str, tuple] = {
     # sketch internals are engine-specific; accuracy pinned in pytest
     "hll_user_counts": (hll_user_counts, None),
     "approx_value_quantiles": (approx_value_quantiles, None),
-    "zorder_events": (zorder_events, ZORDER_SQL),
     "kll_sketch_rollup": (kll_sketch_rollup, None),
     "lateral_top_orders": (lateral_top_orders, LATERAL_SQL),
     "fuzzy_part_matches": (fuzzy_part_matches, FUZZY_SQL),

@@ -423,10 +423,7 @@ def kg_top_supported_sql() -> str:
     )
 
 
-# measurement knob ONLY (scripts/measure_iter_checkpoint.py); contract is 6
-PAGERANK_ITERS = max(
-    1, int(__import__("os").environ.get("SPARK_GRAFT_PAGERANK_ITERS", "6"))
-)
+PAGERANK_ITERS = 6
 PAGERANK_DAMPING = "CAST(0.85 AS DOUBLE)"
 PAGERANK_TELEPORT = "CAST(0.15 AS DOUBLE)"
 
@@ -448,13 +445,17 @@ def kg_pagerank_sql() -> str:
     quantized to the 1e-12 grid so the hash compare sees identical doubles.
     All numeric literals are CAST to DOUBLE — a bare 0.85 is a DECIMAL
     literal in DuckDB and would route the multiply through decimal rules."""
+    # MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, so every
+    # round's references to the derived graph (pr_edges, pr_out, pr_nodes,
+    # pr_n) would re-expand the whole documents → triples chain — measured
+    # out of memory at sf0.001 (12.5 GiB) unhinted.
     sql = (
         _kg_ctes()
         + f""",
-pr_edges AS (SELECT DISTINCT subj AS src, obj AS dst FROM triples WHERE subj <> obj),
-pr_nodes AS (SELECT subj AS entity FROM triples UNION SELECT obj AS entity FROM triples),
-pr_n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes FROM pr_nodes),
-pr_out AS (SELECT src, COUNT(*) AS odeg FROM pr_edges GROUP BY src),
+pr_edges AS MATERIALIZED (SELECT DISTINCT subj AS src, obj AS dst FROM triples WHERE subj <> obj),
+pr_nodes AS MATERIALIZED (SELECT subj AS entity FROM triples UNION SELECT obj AS entity FROM triples),
+pr_n AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes FROM pr_nodes),
+pr_out AS MATERIALIZED (SELECT src, COUNT(*) AS odeg FROM pr_edges GROUP BY src),
 pr_r0 AS (
   SELECT entity, {_pr_qz('CAST(1.0 AS DOUBLE) / n_nodes')} AS pr
   FROM pr_nodes CROSS JOIN pr_n)"""
@@ -538,7 +539,7 @@ LEFT JOIN (SELECT src, COUNT(*) AS odeg FROM ht_edges GROUP BY src) o
 def _und_cte(p: str) -> str:
     """The `{p}_und` CTE: canonical undirected (a < b) distinct edge set of
     the entity graph — the SQL twin of registry._kg_undirected_edges, defined
-    ONCE here so the four graph oracles (lp/kc/bfs/cc) cannot drift from the
+    ONCE here so the graph oracles (tri/lp/kc/bfs/cc) cannot drift from the
     Spark-side derivation or from each other."""
     return f"""{p}_und AS MATERIALIZED (
   SELECT DISTINCT LEAST(subj, obj) AS a, GREATEST(subj, obj) AS b
@@ -551,17 +552,19 @@ def kg_triangles_sql() -> str:
     so each triangle is enumerated exactly once as a wedge at its minimum
     vertex plus a closure lookup (the Spark plan's orientation trick,
     mirrored literally). Integer-only arithmetic — no float parity concerns."""
+    # MATERIALIZED for the same reason as kg_pagerank_sql: tri_und, tri_deg
+    # and tri_or are each referenced several times, and inlined each
+    # reference re-expands the documents → triples chain (measured 71 s at
+    # sf0.001 unhinted).
     return (
         _kg_ctes()
-        + """,
-tri_und AS (
-  SELECT DISTINCT LEAST(subj, obj) AS a, GREATEST(subj, obj) AS b
-  FROM triples WHERE subj <> obj),
-tri_deg AS (
+        + f""",
+{_und_cte("tri")},
+tri_deg AS MATERIALIZED (
   SELECT v, COUNT(*) AS deg FROM (
     SELECT a AS v FROM tri_und UNION ALL SELECT b AS v FROM tri_und
   ) GROUP BY v),
-tri_or AS (
+tri_or AS MATERIALIZED (
   SELECT CASE WHEN (da.deg < db.deg) OR (da.deg = db.deg AND e.a < e.b)
               THEN e.a ELSE e.b END AS src,
          CASE WHEN (da.deg < db.deg) OR (da.deg = db.deg AND e.a < e.b)
@@ -598,8 +601,8 @@ def kg_label_propagation_sql() -> str:
     # round references lp_r{t-1} TWICE (candidate counting + the carry-
     # forward left join), so an un-hinted chain re-evaluates the entire KG
     # build 2^t times — measured 530 s at sf0.01 vs ~2 s materialized.
-    # (kg_pagerank's chain references each round once, hence linear and
-    # unhinted.) Oracle-side only; the Spark plan truncates round lineage
+    # (kg_pagerank's chain references each round once, so only its derived
+    # graph needs the hint.) Oracle-side only; the Spark plan truncates round lineage
     # for the same reason (plans/iterstate.py).
     sql = (
         _kg_ctes()

@@ -416,7 +416,6 @@ def _bpe_chain(spark, sf_dir, caches: list):
             ).alias("rep"),
             "n",
         ),
-        caches,
     )
     rounds = []
     for t in range(1, BPE_ROUNDS + 1):
@@ -437,7 +436,7 @@ def _bpe_chain(spark, sf_dir, caches: list):
             .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
             .agg(F.sum("n").alias("cnt"))
         )
-        pairs = truncate_round(pairs, caches)  # best + stats + merge consume it
+        pairs = truncate_round(pairs)  # best + stats + merge consume it
         best = pairs.orderBy(
             F.desc("cnt"), F.asc("a"), F.asc("b")
         ).limit(1)
@@ -470,7 +469,6 @@ def _bpe_chain(spark, sf_dir, caches: list):
                 ).alias("rep"),
                 "n",
             ),
-            caches,
         )
     return rounds, vocab
 

@@ -42,18 +42,14 @@ def _qz_sql(e: str) -> str:
 
 # ------------------------------------------------------------------ k-means
 KMEANS_K = N_IVF_CENTROIDS  # 8 — trains the IVF coarse quantizer
-# measurement knob ONLY (scripts/measure_iter_checkpoint.py sweeps round
-# counts to size the lineage-truncation default); the contract is 4
-KMEANS_ITERS = max(
-    1, int(__import__("os").environ.get("SPARK_GRAFT_KMEANS_ITERS", "4"))
-)
+KMEANS_ITERS = 4
 # init = the IVF seed vectors: the K HIGHEST vec_ids selected by RANK
 # (textops._seed_centroid_ids — a hardcoded base selects (max - base + 1)
 # "centroids" on a larger table; an id-range predicate off max(vec_id)
 # under-selects when the top ids have gaps)
 
 # centroid relations persisted by the previous invocation — released on the
-# next call (same hygiene as textops._DEDUP_CACHES / registry._KG_CACHES)
+# next call (same hygiene as registry._KG_CACHES)
 _KMEANS_CACHES: list = []
 
 
@@ -133,7 +129,6 @@ def _train_centroids(e: DataFrame, ex: DataFrame) -> tuple[DataFrame, DataFrame]
             cent.join(means, ["cent_id", "i"], "left").select(
                 "cent_id", "i", F.coalesce("mx", F.col("cx")).alias("cx")
             ),
-            _KMEANS_CACHES,
         )
     return cent, assign
 

@@ -163,7 +163,7 @@ def kg_pagerank(spark, sf_dir):
         # doubles per round — 6 rounds print as an 831-exchange static plan
         # and driver-side analysis grows superlinearly with rounds
         # (plans/iterstate.py + BASELINE.md measurements)
-        ranks = truncate_round(ranks, _KG_CACHES)
+        ranks = truncate_round(ranks)
     return ranks.join(outdeg, ranks.entity == outdeg.src, "left").select(
         "entity",
         F.col("pr").alias("pagerank"),
@@ -241,13 +241,13 @@ def kg_hits(spark, sf_dir):
             .groupBy("dst")
             .agg(F.sum(F.col("hub").cast("decimal(28,14)")).alias("s"))
         )
-        auth = truncate_round(normalize(araw, "dst", "auth"), _KG_CACHES)
+        auth = truncate_round(normalize(araw, "dst", "auth"))
         hraw = (
             edges.join(auth, edges.dst == auth.entity)
             .groupBy("src")
             .agg(F.sum(F.col("auth").cast("decimal(28,14)")).alias("s"))
         )
-        hub = truncate_round(normalize(hraw, "src", "hub"), _KG_CACHES)
+        hub = truncate_round(normalize(hraw, "src", "hub"))
     indeg = edges.groupBy("dst").agg(F.count("*").alias("ideg"))
     outdeg = edges.groupBy("src").agg(F.count("*").alias("odeg"))
     return (
@@ -339,7 +339,6 @@ def kg_random_walks(spark, sf_dir):
             .groupBy("start", "w")
             .agg(F.min(F.struct("h", "dst")).alias("m"))
             .select("start", "w", F.col("m.dst").alias("cur")),
-            _KG_CACHES,
         )
         steps.append(
             state.select(
@@ -381,7 +380,6 @@ def kg_modularity(spark, sf_dir):
         _label_propagation(nodes, und, LPA_ITERS).select(
             "entity", "community"
         ),
-        _KG_CACHES,
     )
     return _modularity_contributions(comm, und)
 
@@ -508,7 +506,7 @@ def _wsp_distance(edges, iters: int, n_seeds: int, caches: list):
         .select(F.col("src").alias("v"))
     )
     dist = truncate_round(
-        seeds.select("v", F.lit(0).cast("long").alias("dist")), caches
+        seeds.select("v", F.lit(0).cast("long").alias("dist"))
     )
     for _ in range(iters):
         relaxed = dist.join(edges, dist.v == edges.src).select(
@@ -519,7 +517,6 @@ def _wsp_distance(edges, iters: int, n_seeds: int, caches: list):
             relaxed.union(dist.select("v", "dist"))
             .groupBy("v")
             .agg(F.min("dist").alias("dist")),
-            caches,
         )
     return dist.select(
         F.col("v").alias("entity"), F.col("dist").cast("long").alias("dist")
@@ -560,16 +557,13 @@ def kg_triangles(spark, sf_dir):
     # before the cut, runtime 11 stages), and the driver pays analysis
     # cost on that tree for every planned action. All three relations are
     # edge/node scale — cheap to materialize.
-    und = truncate_round(_kg_undirected_edges(triples), _KG_CACHES)
-    und.count()  # trivial when checkpointed; races the flag-OFF lazy persist otherwise
+    und = truncate_round(_kg_undirected_edges(triples))
     deg = truncate_round(
         und.select(F.col("a").alias("v"))
         .union(und.select(F.col("b").alias("v")))
         .groupBy("v")
-        .agg(F.count("*").alias("deg")),
-        _KG_CACHES,
+        .agg(F.count("*").alias("deg"))
     )
-    deg.count()
     e = und.join(
         deg.select(F.col("v").alias("a"), F.col("deg").alias("da")), "a"
     ).join(deg.select(F.col("v").alias("b"), F.col("deg").alias("db")), "b")
@@ -580,10 +574,8 @@ def kg_triangles(spark, sf_dir):
         e.select(
             F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
             F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        ),
-        _KG_CACHES,
+        )
     )
-    oriented.count()
     o1 = oriented.select("src", F.col("dst").alias("d1"))
     o2 = oriented.select("src", F.col("dst").alias("d2"))
     wedges = o1.join(o2, "src").where(F.col("d1") < F.col("d2"))
@@ -637,7 +629,6 @@ def _coreness(und, iters: int, cache_registry: list | None = None):
         nbr.groupBy("src").agg(F.count("*").alias("deg")).select(
             F.col("src").alias("v"), "deg"
         ),
-        caches,
     )
     deg.count()  # deg feeds round 0 AND the final join — sibling consumers
     c = deg.select("v", F.col("deg").alias("c"))
@@ -651,7 +642,7 @@ def _coreness(und, iters: int, cache_registry: list | None = None):
             .groupBy("v")
             .agg(F.max(F.least(F.col("x"), F.col("r"))).alias("c"))
         )
-        c = truncate_round(c, caches)
+        c = truncate_round(c)
     return deg.join(c, "v").select(
         F.col("v").alias("entity"),
         F.col("deg").cast("long").alias("degree"),
@@ -672,7 +663,7 @@ def kg_coreness(spark, sf_dir):
     from .kg_oracle import KCORE_ITERS
 
     triples = _kg_build(spark, sf_dir)
-    und = truncate_round(_kg_undirected_edges(triples), _KG_CACHES)
+    und = truncate_round(_kg_undirected_edges(triples))
     und.count()  # both union legs of nbr consume it concurrently
     return _coreness(und, KCORE_ITERS)
 
@@ -726,7 +717,7 @@ def _label_propagation(nodes, und, iters: int, cache_registry: list | None = Non
                 "entity", F.coalesce("new_lbl", "lbl").alias("lbl")
             )
         )
-        labels = truncate_round(labels, caches)
+        labels = truncate_round(labels)
     sizes = labels.groupBy("lbl").agg(F.count("*").alias("n"))
     return labels.join(sizes, "lbl").select(
         "entity",
@@ -785,7 +776,6 @@ def _bfs_distance(und, iters: int, n_seeds: int, cache_registry: list | None = N
     )
     seeds = truncate_round(
         deg.orderBy(F.desc("deg"), F.asc("v")).limit(n_seeds).select("v"),
-        caches,
     )
     reached = seeds.select("v", F.lit(0).cast("int").alias("hop"))
     frontier = seeds
@@ -799,9 +789,8 @@ def _bfs_distance(und, iters: int, n_seeds: int, cache_registry: list | None = N
             cand.join(reached, "v", "left_anti").select(
                 "v", F.lit(t).cast("int").alias("hop")
             ),
-            caches,
         )
-        reached = truncate_round(reached.unionByName(new), caches)
+        reached = truncate_round(reached.unionByName(new))
         frontier = new.select("v")
     return reached.select(
         F.col("v").alias("entity"), F.col("hop").cast("long").alias("hop")
@@ -820,7 +809,7 @@ def kg_bfs_distance(spark, sf_dir):
     from .kg_oracle import BFS_ITERS, BFS_SEEDS
 
     triples = _kg_build(spark, sf_dir)
-    und = truncate_round(_kg_undirected_edges(triples), _KG_CACHES)
+    und = truncate_round(_kg_undirected_edges(triples))
     return _bfs_distance(und, BFS_ITERS, BFS_SEEDS)
 
 
@@ -855,7 +844,7 @@ def kg_connected_components(spark, sf_dir):
     from ..pipeline.canonicalize import _qnum, connected_components_long
 
     triples = _kg_build(spark, sf_dir)
-    und = truncate_round(_kg_undirected_edges(triples), _KG_CACHES)
+    und = truncate_round(_kg_undirected_edges(triples))
     comp = connected_components_long(
         und.select(_qnum("a").alias("u"), _qnum("b").alias("v")),
         require_converged=True,
@@ -899,7 +888,6 @@ def _link_prediction(und, hub_cap: int, min_cn: int, cache_registry: list | None
         nbr.groupBy("src").agg(F.count("*").alias("deg")).select(
             F.col("src").alias("v"), "deg"
         ),
-        caches,
     )
     deg.count()  # feeds the center filter AND both final degree joins
     centers = nbr.join(
@@ -947,7 +935,7 @@ def kg_link_prediction(spark, sf_dir):
     from .kg_oracle import LINKPRED_HUB_CAP, LINKPRED_MIN_CN
 
     triples = _kg_build(spark, sf_dir)
-    und = truncate_round(_kg_undirected_edges(triples), _KG_CACHES)
+    und = truncate_round(_kg_undirected_edges(triples))
     return _link_prediction(und, LINKPRED_HUB_CAP, LINKPRED_MIN_CN)
 
 
@@ -973,7 +961,7 @@ def kg_assortativity(spark, sf_dir):
     partials if d_max·m approaches 2^63) with one final IEEE division;
     a perfectly regular graph zeroes the denominator → NULL, both engines."""
     triples = _kg_build(spark, sf_dir)
-    und = truncate_round(_kg_undirected_edges(triples), _KG_CACHES)
+    und = truncate_round(_kg_undirected_edges(triples))
     und.count()  # nbr's union legs + the edge-count agg consume it concurrently
     nbr = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
         und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
@@ -982,7 +970,6 @@ def kg_assortativity(spark, sf_dir):
         nbr.groupBy("src").agg(F.count("*").alias("deg")).select(
             F.col("src").alias("v"), "deg"
         ),
-        _KG_CACHES,
     )
     deg.count()  # feeds both endpoint joins + the node-count agg
     dx = deg.select(F.col("v").alias("src"), F.col("deg").alias("x"))
@@ -1714,11 +1701,6 @@ _UNREGISTERED = {
     # decorrelates to the ranked-window shape; topk_per_group keeps the W1
     # CORR row)
     "lateral_top_orders",
-    # zorder_events — Morton z-value clustering key for multi-dimension
-    # file skipping (operators/zorder.py); the layout/pruning benefit is
-    # pinned in tests/test_zorder.py, the bit algebra oracled in the
-    # pytest lane
-    "zorder_events",
     # fuzzy_part_matches — blocked-Levenshtein entity resolution (best
     # near-duplicate per record); the approximate-match step ahead of the
     # exact-key canonicalizer whose CORR row the kg lane holds
@@ -2006,7 +1988,7 @@ _UNREGISTERED = {
     # exact largest-remainder rounding to the budget
     "neyman_allocation",
     # dedup_time_window — tumbling-window first-event dedup (at-least-once
-    # ingestion idempotency; the batch twin of the streaming lane's
+    # ingestion idempotency; the batch form of a streaming
     # dropDuplicatesWithinWatermark); one bucket-keyed window
     "dedup_time_window",
     # cms_token_counts — Count-Min sketch build + probe with measured

@@ -159,9 +159,7 @@ def _scan_partitions(spark: SparkSession, df: DataFrame) -> int:
 #: granularity). A DATA-size rule, not a core-count rule: at cluster
 #: scale splits are maxPartitionBytes-sized and plentiful, so the
 #: splits<cores guard is already false and this floor never evaluates.
-_FANOUT_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", str(6 << 20))
-)
+_FANOUT_MIN_BYTES = 6 << 20
 
 #: Target compressed bytes per fan-out split. The fan-out WIDTH is derived
 #: from the data (total_bytes / this, clamped to [2, cores]), not pinned to
@@ -174,9 +172,7 @@ _FANOUT_MIN_BYTES = int(
 #: warm. ~1.5 MB compressed is roughly 8-10 MB of in-memory rows: large
 #: enough to amortize a task launch, small enough that the serial sort per
 #: task stays sub-0.1 s.
-_FANOUT_SPLIT_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_SPLIT_BYTES", str(3 << 19))
-)
+_FANOUT_SPLIT_TARGET_BYTES = 3 << 19
 
 
 def _fan_out_for_window(
@@ -190,7 +186,7 @@ def _fan_out_for_window(
     1.05 s topk_per_group wall). A window partitioned by `keys` needs a
     hash(keys) exchange anyway; when (and only when) the scan supplies
     fewer splits than cores AND those splits are heavy enough that the
-    serial sort dominates (see _FANOUT_MIN_SPLIT_BYTES), issue that
+    serial sort dominates (see _FANOUT_MIN_BYTES), issue that
     exchange explicitly BELOW the sort so the sort/window work runs at
     full parallelism. The plan keeps exactly one exchange either way; on a
     many-split table (the 100 TB case) the condition is false and the plan

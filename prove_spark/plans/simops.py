@@ -46,7 +46,7 @@ THETA_NUM = 7
 THETA_DEN = 10
 
 # caches persisted by the previous invocation — released on the next call
-# (same hygiene as textops._DEDUP_CACHES / registry._KG_CACHES)
+# (same hygiene as registry._KG_CACHES)
 _SIM_CACHES: list = []
 
 
@@ -264,7 +264,6 @@ def mmr_rerank(spark, sf_dir):
         rel.withColumn("rnk", F.row_number().over(wq)).where(
             F.col("rnk") <= MMR_N
         ),
-        _SIM_CACHES,
     )
     cex = cands.select("query_id", "cand_id").join(
         ex, ex.vec_id == F.col("cand_id")
@@ -301,7 +300,6 @@ def mmr_rerank(spark, sf_dir):
         sims0.union(
             sims0.select("query_id", F.col("cb").alias("ca"), F.col("ca").alias("cb"), "sim")
         ),
-        _SIM_CACHES,
     )
     selected = truncate_round(
         cands.where(F.col("rnk") == 1).select(
@@ -310,7 +308,6 @@ def mmr_rerank(spark, sf_dir):
             "rel",
             F.lit(1).cast("int").alias("mmr_rank"),
         ),
-        _SIM_CACHES,
     )
     for t in range(2, MMR_K + 1):
         sel_keys = selected.select("query_id", F.col("cand_id").alias("s"))
@@ -353,7 +350,7 @@ def mmr_rerank(spark, sf_dir):
                 F.lit(t).cast("int").alias("mmr_rank"),
             )
         )
-        selected = truncate_round(selected.union(pick), _SIM_CACHES)
+        selected = truncate_round(selected.union(pick))
     return selected.select(
         "query_id",
         F.col("cand_id").alias("neighbor_id"),

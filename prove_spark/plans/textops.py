@@ -126,14 +126,6 @@ shingles AS (
 # bit-identical to the uncapped query.
 MAX_SHINGLE_DF = 64
 
-# caches persisted by dedup invocations — released on the next call so
-# repeated sweeps (driver correctness runs, bench loops) don't accumulate
-# dead cached RDDs (same hygiene as registry._KG_CACHES). r6: the rewritten
-# dedup_ngram_jaccard no longer persists anything (exchange reuse replaced
-# the cache), but the registry stays for any future persisting member.
-_DEDUP_CACHES: list = []
-
-
 def dedup_ngram_jaccard(spark, sf_dir):
     """Near-dup pairs by 3-gram-shingle Jaccard >= 0.5 (shingle inverted-index
     formulation — never a cross join; integer-ratio Jaccard is exact).
@@ -1029,8 +1021,7 @@ WHERE {_SAMP_HASH} % 100
 
 # --------------------------------------------------------------- multimodal
 def multimodal_bytes(spark, sf_dir):
-    """Multimodal byte-plumbing: opaque binary payload + typed metadata
-    (decode itself is stubbed in operators/multimodal.py)."""
+    """Multimodal byte-plumbing: opaque binary payload + typed metadata."""
     d = _t(spark, sf_dir, "documents")
     return d.select(
         "doc_id",

@@ -19,7 +19,7 @@ def _cache_free_session(spark):
     """Plan assertions require a cache-free session: Spark's cache manager
     substitutes InMemoryRelation into ANY later plan that structurally
     matches a persisted one, and the engine's deferred-unpersist registries
-    (released on the NEXT invocation — plans/simops.py, textops._DEDUP_CACHES,
+    (released on the NEXT invocation — plans/simops.py,
     registry._KG_CACHES) legitimately leave the last run's caches live
     across test modules. Measured: jaccard_prefix_join's persisted bare
     `_shingles(sf0.001)` turned the shingle plan test's scan into an
