@@ -221,10 +221,8 @@ def kg_measure(
     # attribution" for the measured cost of each):
     #   SPARK_GRAFT_SPLIT_MB   input split size in MB; 0 = Spark default 128
     #   SPARK_GRAFT_BENCH_UI   1 = UI + REST per-stage attribution (default)
-    #   SPARK_GRAFT_PAIR_HINT  pair-join hint; "none" = let AQE choose
     split_mb = int(os.environ.get("SPARK_GRAFT_SPLIT_MB", "8"))
     ui_on = os.environ.get("SPARK_GRAFT_BENCH_UI", "1") == "1"
-    pair_hint = os.environ.get("SPARK_GRAFT_PAIR_HINT", "merge")
     # SPARK_GRAFT_OFFHEAP_MB: Tungsten off-heap execution memory (0 = off,
     # the conf of record). Experiment knob for the scaling residue: in local
     # mode all N "executors" share one heap, so GC pressure rises with
@@ -285,11 +283,7 @@ def kg_measure(
 
     from prove_spark.config import DEFAULT_CONFIG
 
-    cfg = replace(
-        DEFAULT_CONFIG,
-        engine=engine,
-        pair_join_hint="" if pair_hint == "none" else pair_hint,
-    )
+    cfg = replace(DEFAULT_CONFIG, engine=engine)
     # Warmup at a SMALL replicate: its purpose is JIT + Python-worker spin-up
     # + dim/session caches, which a 1/16-size run triggers identically at a
     # fraction of the cost of a full-size throwaway run (at rep=512 the old

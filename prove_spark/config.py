@@ -41,20 +41,6 @@ class PipelineConfig:
     salt_buckets: int = 8
     # Truncate pathological turn text before shuffles (spill control).
     max_turn_chars: int = 16384
-    # Join strategy hint for the claim×evidence pair join (stages.py:
-    # score_evidence). "merge" forces a shuffle join so both sides land
-    # hash(conv_id) and the downstream window/agg/rejoin reuse that one
-    # exchange — at 100 TB the claims side never fits a broadcast, so the
-    # hint only pins what a cluster plan would do anyway. "" lets AQE pick
-    # (at bench scale that's a broadcast of the claims side; measured within
-    # noise of the merge plan at local[32], see BASELINE.md attribution).
-    pair_join_hint: str = "merge"
-    # Arrow engine only: repartition raw pairs by (conv_id, claim_id) before
-    # the scorer UDF instead of scoring map-side. Pays only when the scorer
-    # is expensive enough (per-row model forward passes) that rebalancing
-    # pair-density skew beats the partial-top-k shuffle cut; the r4 batch-
-    # vectorized stand-in scorer measures faster map-side (see stages.py).
-    arrow_repartition_pairs: bool = False
     # Canonicalization fixpoint guard.
     max_cc_iterations: int = 20
     # NLI class order + below-threshold default distribution: when no

@@ -463,23 +463,11 @@ def score_evidence(
     # full pair set — measured 583 MB vs the 124 MB co-partitioned shuffle
     # this hint preserves. With "merge", both sides land hash(conv_id) and
     # the window + verdict agg + claim rejoin all reuse that one exchange.
-    if config.pair_join_hint:
-        claim_keys = claim_keys.hint(config.pair_join_hint)
-    paired = claim_keys.join(ev, "conv_id", "inner")
-    if config.engine != "jvm" and config.arrow_repartition_pairs:
-        # Arrow path, optional: EXPLICIT repartition on the high-cardinality
-        # (conv_id, claim_id) key BEFORE the scorer UDF. With the r1-r3
-        # per-row Python scorer this paid for itself (pair-density skew
-        # measured 13x task-duration spread); with the r4 batch-vectorized
-        # scorer the map-side plan below measures faster, so the default is
-        # now False and this branch remains for genuinely expensive models
-        # (a real NN forward pass) where rebalancing beats partial top-k.
-        #
-        # Default (both engines): leave the scorer map-side — Spark's
-        # partial WindowGroupLimit cuts the shuffle to ≤k rows per (claim,
-        # map partition) before the exchange; at 100 TB that's the
-        # difference between shuffling all pairs and ~top-k·claims rows.
-        paired = paired.repartition("conv_id", "claim_id")
+    paired = claim_keys.hint("merge").join(ev, "conv_id", "inner")
+    # Both engines score map-side: Spark's partial WindowGroupLimit cuts the
+    # shuffle to ≤k rows per (claim, map partition) before the exchange; at
+    # 100 TB that's the difference between shuffling all pairs and
+    # ~top-k·claims rows.
     # r6: one explicit projection computes the score and (on the jvm
     # engine) drops both token arrays before the window — each avoided
     # DataFrame transformation here is one fewer eager re-analysis of the

@@ -1288,9 +1288,10 @@ CALIBRATION_BINS = 10
 def kg_calibration_sql() -> str:
     """Verdict-calibration oracle: the NLI scorer's predicted support
     probability (w_supports) binned into CALIBRATION_BINS fixed-width bins
-    over [0, 1] (explicit FLOOR formula — the drift_report width_bucket
-    rule), each bin reporting how often 'supports' verdicts ACTUALLY won
-    vs the mean predicted probability (the reliability-diagram table).
+    over [0, 1] (explicit FLOOR formula — width_bucket's FP expression is
+    engine-specific), each bin reporting how often 'supports' verdicts
+    ACTUALLY won vs the mean predicted probability (the reliability-diagram
+    table).
     mean_pred goes through DECIMAL(28,14) partial sums (order-independent,
     the kg_pagerank discipline); support_rate and the gap are fixed IEEE
     trees over exactly-computed inputs."""

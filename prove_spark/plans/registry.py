@@ -22,12 +22,9 @@ from pyspark.sql.window import Window
 from .advanced import ADVANCED_QUERIES
 from .iterstate import truncate_round
 from .disambig import DISAMBIG_QUERIES
-from .dqops import DQOPS_QUERIES
 from .lmops import LMOPS_QUERIES
 from .mlops import MLOPS_QUERIES
 from .relational import RELATIONAL_QUERIES
-from .shardops import SHARDOPS_QUERIES
-from .simops import SIMOPS_QUERIES
 from .textops import TEXTOPS_QUERIES
 
 
@@ -1017,7 +1014,7 @@ def kg_calibration(spark, sf_dir):
     Scale shape: a pure map-side bin projection riding the triples relation
     followed by ONE combinable groupBy on the bin key (≤ CALIBRATION_BINS
     groups). Cross-engine exactness: the bin edge is an explicit FLOOR
-    formula, NOT width_bucket (the drift_report rule); mean_pred sums the
+    formula, NOT width_bucket (engine-specific FP); mean_pred sums the
     double probabilities through DECIMAL(28,14) partials (order-independent
     — the kg_pagerank discipline); support_rate/gap are fixed IEEE trees
     over exactly-computed inputs."""
@@ -1738,16 +1735,6 @@ _UNREGISTERED = {
     # overlap), the RAG/context-budget inverse of pack_sequences (which
     # holds the family's CORR row); map-only explode, integers/strings only
     "chunk_documents",
-    # dq_report — Deequ/dbt-style declared-expectation validation report
-    # (fused conditional counts + anti-join referential checks); the agg
-    # and anti-join shapes it composes hold CORR rows elsewhere
-    "dq_report",
-    # epoch_shuffle / shard_manifest — deterministic training-order export
-    # + per-shard audit manifest; the window/agg shapes are CORR-pinned
-    # elsewhere (topk_per_group, rollup_order_stats), the export semantics
-    # pinned in tests/test_shardops.py
-    "epoch_shuffle",
-    "shard_manifest",
     # url_host_extract — single parse_url projection (C9) whose map-only
     # shape several CORR rows pin; rotated out r5 in favor of
     # kg_label_propagation (community detection — a genuinely new graph
@@ -1761,16 +1748,6 @@ _UNREGISTERED = {
     # superset property, and plan shape are pinned on crafted fixtures in
     # tests/test_alias_anchored.py
     "alias_mentions_anchored",
-    # jaccard_prefix_join — EXACT similarity join via AllPairs/PPJoin prefix
-    # filtering (full-universe exactness where dedup_ngram_jaccard caps the
-    # universe and LSH approximates); its brute-force oracle doubles as a
-    # recall proof, and tests/test_simops.py pins the pruning claim
-    "jaccard_prefix_join",
-    # mmr_rerank — MMR diversified re-ranking (Carbonell/Goldstein) after
-    # the pure-relevance ANN ranking; candidate-pool-bounded greedy rounds,
-    # exact-cosine discipline; the retrieval family's CORR rows are the
-    # ANN pair
-    "mmr_rerank",
     # kg_coreness — per-entity k-core number via the h-index iteration (the
     # graph family's fifth signal; registry is full at 50, and the four
     # registered kg graph rows already pin the iterative-join machinery);
@@ -1932,11 +1909,6 @@ _UNREGISTERED = {
     # statistic neither engine ships); one group-partitioned cumulative
     # window + integer qualifying test + combinable min
     "weighted_median_price",
-    # drift_report — baseline-vs-current distribution drift (PSI-family;
-    # chi-square terms instead of ln-based PSI for bit-portability);
-    # map-only explicit binning + combinable cell counts + broadcast
-    # totals; dq_report holds the family's pytest lane seat
-    "drift_report",
     # user_value_trend — per-entity OLS slope/intercept (REGR_SLOPE
     # semantics) via the five combinable sufficient statistics; DECIMAL
     # partial sums + a fixed IEEE closed-form tree; rebased-x keeps the
@@ -2004,18 +1976,6 @@ _UNREGISTERED = {
     # carry of the last non-purchase touchpoint within a 7-day lookback +
     # channel rollup); one user-partitioned running window
     "attribution_last_touch",
-    # hot_key_report — join/agg key-skew diagnostic (max/avg skew ratio per
-    # audited key — the measurement behind the salting decisions); one
-    # combinable groupBy + 1-row rollup per audited key
-    "hot_key_report",
-    # mutual_nn_pairs — reciprocal-best-hit alignment within label buckets
-    # (the bitext-mining/entity-alignment precision filter); bucket-bounded
-    # candidate pairs, per-vector best window, one self-join mutuality check
-    "mutual_nn_pairs",
-    # ab_test_zscores — two-proportion z-test per metric (the
-    # experimentation readout; sqrt is correctly-rounded libm-safe, the
-    # one-pass conditional-count shape is CORR-pinned elsewhere)
-    "ab_test_zscores",
     # ann_recall_eval — recall@k of the IVF index vs the exact brute-force
     # ground truth (the retrieval twin of dedup_pr_eval; both sides are the
     # repo's own oracled ANN queries reused verbatim)
@@ -2026,10 +1986,10 @@ _UNREGISTERED = {
     "kg_assortativity",
     # kg_calibration — reliability-diagram table for the NLI verdict scorer
     # (per-bin ECE terms; explicit bin formula, DECIMAL mean discipline) —
-    # the model-monitoring eval beside roc_auc_score/dedup_pr_eval
+    # the model-monitoring eval beside dedup_pr_eval
     "kg_calibration",
     # source_lang_hhi — per-source language-mix concentration (HHI + top
-    # share; entropy avoided — ln is libm, the drift_report rule); the
+    # share; entropy avoided — ln is libm, the token_pmi rule); the
     # corpus collapses to dimension-bounded (source, lang) cells in one
     # combinable pass
     "source_lang_hhi",
@@ -2041,15 +2001,6 @@ _UNREGISTERED = {
     # support/confidence/lift over same-order part pairs); basket-bounded
     # self-join fan-out, broadcast item supports, 1-row basket total
     "basket_pairs",
-    # roc_auc_score — Mann-Whitney rank-sum ROC-AUC with mid-rank ties over
-    # the quantized-score grid (the model-eval op; the eval family's third
-    # member beside dedup_pr_eval/kg_modularity); integer-exact to the one
-    # final division, no row-scale sort (bounded grid dimension)
-    "roc_auc_score",
-    # changepoint_cusum — per-stream CUSUM changepoint (the split-FINDING
-    # twin of drift_report's fixed-window compare); all-BIGINT scaled
-    # statistic, both windows share one type-day partitioning
-    "changepoint_cusum",
     # token_pmi — PMI-style co-occurrence lift (collocation mining) beside
     # tfidf_top_terms/bm25_rank in the corpus-statistics family; the
     # df-band + bounded self-join shape mirrors dedup_ngram_jaccard's
@@ -2062,22 +2013,18 @@ _UNREGISTERED = {
 # (tests/test_entry_queries.py) and scripts/plan_audit.py both consume THIS
 # mapping, so a new family dict added above cannot silently fall out of
 # either gate (test_every_unregistered_name_is_collected pins completeness).
+# _FAMILIES lists every family dict once, for this mapping and _GATELESS.
+_FAMILIES = (
+    RELATIONAL_QUERIES,
+    TEXTOPS_QUERIES,
+    ADVANCED_QUERIES,
+    MLOPS_QUERIES,
+    LMOPS_QUERIES,
+    DISAMBIG_QUERIES,
+    KG_EXTRA_QUERIES,
+)
 UNREGISTERED_QUERIES: dict[str, tuple] = {
-    n: v
-    for d in (
-        RELATIONAL_QUERIES,
-        TEXTOPS_QUERIES,
-        ADVANCED_QUERIES,
-        MLOPS_QUERIES,
-        LMOPS_QUERIES,
-        SHARDOPS_QUERIES,
-        SIMOPS_QUERIES,
-        DQOPS_QUERIES,
-        DISAMBIG_QUERIES,
-        KG_EXTRA_QUERIES,
-    )
-    for n, v in d.items()
-    if n in _UNREGISTERED
+    n: v for d in _FAMILIES for n, v in d.items() if n in _UNREGISTERED
 }
 
 ALL_QUERIES: dict[str, tuple] = {
@@ -2100,22 +2047,9 @@ assert len(ALL_QUERIES) <= 50, "driver sweep records at most 50 rows"
 # land in SOME gate — the registered sweep (ALL_QUERIES) or the pytest
 # oracle lane (UNREGISTERED_QUERIES). Without this, a query added to a
 # family dict but forgotten in _UNREGISTERED would silently lose every gate
-# (LMOPS/SHARDOPS/KG_EXTRA are merged only into the unregistered side, so
-# the <=50 assert alone cannot notice).
-_GATELESS = {
-    n
-    for d in (
-        RELATIONAL_QUERIES,
-        TEXTOPS_QUERIES,
-        ADVANCED_QUERIES,
-        MLOPS_QUERIES,
-        LMOPS_QUERIES,
-        SHARDOPS_QUERIES,
-        SIMOPS_QUERIES,
-        DQOPS_QUERIES,
-        DISAMBIG_QUERIES,
-        KG_EXTRA_QUERIES,
-    )
-    for n in d
-} - set(ALL_QUERIES) - set(UNREGISTERED_QUERIES)
+# (LMOPS/KG_EXTRA are merged only into the unregistered side, so the <=50
+# assert alone cannot notice).
+_GATELESS = {n for d in _FAMILIES for n in d} - set(ALL_QUERIES) - set(
+    UNREGISTERED_QUERIES
+)
 assert not _GATELESS, f"queries in no gate (register or add to _UNREGISTERED): {_GATELESS}"

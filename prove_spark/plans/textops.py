@@ -596,14 +596,13 @@ def _packed_dot(a, b):
     )
 
 
-def _packed_vectors(spark, sf_dir, with_label: bool = False):
-    """Shared packed-vector relation for the zip_with-scored consumers
-    (ann_topk_cosine here, simops.mutual_nn_pairs): vec_id [+ label], the
-    array<double> vector, and its DECIMAL norm — with EMPTY vectors dropped,
-    matching the exploded oracles (UNNEST of an empty array yields no rows,
-    so the vector never reaches the norm/dot relations there; the packed
-    fold would instead keep it with nsq = 0 and divide by zero). Single
-    source so the two scoring paths cannot drift on edge semantics.
+def _packed_vectors(spark, sf_dir):
+    """Packed-vector relation for ann_topk_cosine's zip_with scoring:
+    vec_id, the array<double> vector, and its DECIMAL norm — with EMPTY
+    vectors dropped, matching the exploded oracle (UNNEST of an empty array
+    yields no rows, so the vector never reaches the norm/dot relations
+    there; the packed fold would instead keep it with nsq = 0 and divide by
+    zero).
 
     r6: the embeddings table is conditionally fanned out to the session's
     core count (guide §2.5 input-skew note — the testdata parquet is a
@@ -613,10 +612,9 @@ def _packed_vectors(spark, sf_dir, with_label: bool = False):
     gains no exchange)."""
     from .relational import _t as _tbl
 
-    cols = ["vec_id"] + (["label"] if with_label else [])
     e = _rebalance_scan(
         spark, _tbl(spark, sf_dir, "embeddings"), "vec_id"
-    ).select(*cols, F.col("embedding").cast("array<double>").alias("emb"))
+    ).select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
     return e.where(F.size("emb") > 0).withColumn(
         "nsq", _packed_dot(F.col("emb"), F.col("emb"))
     )
@@ -1821,7 +1819,7 @@ def neyman_allocation(spark, sf_dir):
     )  # 1 row
     # zero-total guard (every stratum singleton/constant → all weights 0):
     # an unguarded 0/0 is NaN in Spark but NULL in DuckDB — make it NULL on
-    # both engines (the roc_auc/ab_test degenerate-lane discipline)
+    # both engines
     q = wtd.crossJoin(F.broadcast(tot)).select(
         "stratum",
         "n",
@@ -2361,8 +2359,8 @@ def source_lang_hhi(spark, sf_dir):
     the mixture-diagnostics screen a training-data pipeline runs before
     setting sampling weights (is a source effectively monolingual, or
     balanced?). HHI = Σ n_i² / N² rather than Shannon entropy deliberately:
-    entropy needs ln() (libm, not bit-portable — the drift_report/token_pmi
-    rule) while HHI is exact integers up to ONE final IEEE division.
+    entropy needs ln() (libm, not bit-portable — the token_pmi rule) while
+    HHI is exact integers up to ONE final IEEE division.
 
     Scale shape: the corpus collapses to (source, lang) cells in ONE
     combinable groupBy; the per-source rollup and the dominant-language

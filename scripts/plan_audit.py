@@ -60,9 +60,6 @@ ALLOWED: dict[str, tuple[str, int]] = {
     "token_pmi": ("BroadcastNestedLoopJoin", 2),
     # same 1-row vocab broadcast, riding in via the composed bigram score
     "curriculum_bins": ("BroadcastNestedLoopJoin", 1),
-    # 1-row per-table aggregate + anti-join-count relations assembled into
-    # the report via scalar crossJoins
-    "dq_report": ("BroadcastNestedLoopJoin", 4),
     # 1-row (min,max) price-range broadcast feeding width_bucket; the
     # bucketed relation is consumed by the group pass AND the row-level
     # join-back, so the one logical crossJoin prints as three physical
@@ -79,9 +76,6 @@ ALLOWED: dict[str, tuple[str, int]] = {
     "dpo_pairs": ("BroadcastNestedLoopJoin", 1),
     # 1-row edge-count (m) broadcast in the modularity summand
     "kg_modularity": ("BroadcastNestedLoopJoin", 1),
-    # 1-row (time range, value range) frame broadcast; the binned relation
-    # feeds both count lanes, so the one crossJoin prints twice
-    "drift_report": ("BroadcastNestedLoopJoin", 2),
     # 1-row subspace-split-point broadcast feeding each encoder slice (the
     # two final assignment slices re-expand it in the plan string)
     "pq_codes": ("BroadcastNestedLoopJoin", 3),

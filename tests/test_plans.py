@@ -19,11 +19,11 @@ def _cache_free_session(spark):
     """Plan assertions require a cache-free session: Spark's cache manager
     substitutes InMemoryRelation into ANY later plan that structurally
     matches a persisted one, and the engine's deferred-unpersist registries
-    (released on the NEXT invocation — plans/simops.py,
-    registry._KG_CACHES) legitimately leave the last run's caches live
-    across test modules. Measured: jaccard_prefix_join's persisted bare
-    `_shingles(sf0.001)` turned the shingle plan test's scan into an
-    InMemoryTableScan with an extra Exchange."""
+    (released on the NEXT invocation — registry._KG_CACHES,
+    mlops._KMEANS_CACHES) legitimately leave the last run's caches live
+    across test modules. A cached relation that matches part of a later
+    plan turns that plan's scan into an InMemoryTableScan, which can add
+    an Exchange the plan assertions do not expect."""
     spark.catalog.clearCache()
     yield
 
@@ -73,8 +73,7 @@ def test_arrow_engine_python_stages_and_mapside_topk(spark):
     """engine='arrow' runs the model stand-ins as Python/Arrow stages AND
     (since the r4 batch-vectorized scorer) scores map-side so the partial
     WindowGroupLimit cuts the pair exchange — same shuffle shape as the
-    JVM engine. The r1-r3 explicit pair rebalance stays available behind
-    config.arrow_repartition_pairs for genuinely expensive models."""
+    JVM engine."""
     from prove_spark.datagen import transcripts_df
     from prove_spark.pipeline.run import build_triples
 
