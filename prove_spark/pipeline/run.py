@@ -78,8 +78,10 @@ def build_triples(
     )
     hit = _PLAN_MEMO.get(key)
     if hit is None or hit[0] is not transcripts:
-        for k in [k for k in _PLAN_MEMO if k[0] != key[0]]:
-            del _PLAN_MEMO[k]
+        # list() snapshots the keys atomically: bucket groups plan on two
+        # threads (pipeline/checkpoint.py), and the other may insert meanwhile
+        for k in [k for k in list(_PLAN_MEMO) if k[0] != key[0]]:
+            _PLAN_MEMO.pop(k, None)
         base = stages.extract_sentences(transcripts, config)
         # base sentences feed BOTH claim detection and the evidence pool;
         # persisted (below, per call) so the text-heavy extraction kernel

@@ -11,11 +11,16 @@ SparkSession (new JVM) rebuilds them.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 _CACHE: dict[tuple[str, str], DataFrame] = {}
+# held across the build, so threads planning at once (the checkpointed
+# build's bucket groups) build each dimension once; reentrant for builders
+# that read another session dim
+_LOCK = threading.RLock()
 
 
 def session_dim(
@@ -23,12 +28,13 @@ def session_dim(
 ) -> DataFrame:
     app_id = spark.sparkContext.applicationId
     cache_key = (app_id, key)
-    df = _CACHE.get(cache_key)
-    if df is None:
-        # purge entries from other (stopped) sessions so the cache stays
-        # bounded across session restarts within one process
-        for k in [k for k in _CACHE if k[0] != app_id]:
-            del _CACHE[k]
-        df = builder(spark)
-        _CACHE[cache_key] = df
+    with _LOCK:
+        df = _CACHE.get(cache_key)
+        if df is None:
+            # purge entries from other (stopped) sessions so the cache stays
+            # bounded across session restarts within one process
+            for k in [k for k in _CACHE if k[0] != app_id]:
+                del _CACHE[k]
+            df = builder(spark)
+            _CACHE[cache_key] = df
     return df

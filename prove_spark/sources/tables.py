@@ -13,8 +13,14 @@ SQLite read path (functions.py:45-103).
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# Iceberg first writes check exists() and then create(): two bucket groups
+# committing at once (pipeline/checkpoint.py) could both see "absent".
+_ICEBERG_CREATE = threading.Lock()
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -110,10 +116,11 @@ class TableIO:
 
     def append(self, df: DataFrame, table: str) -> None:
         if self.use_iceberg:
-            if self.exists(table):
-                df.writeTo(self.ident(table)).append()
-            else:
-                df.writeTo(self.ident(table)).using("iceberg").create()
+            with _ICEBERG_CREATE:
+                if not self.exists(table):
+                    df.writeTo(self.ident(table)).using("iceberg").create()
+                    return
+            df.writeTo(self.ident(table)).append()
             return
         df.write.mode("append").parquet(self.path(table))
 
@@ -131,15 +138,16 @@ class TableIO:
         by the bucket column — same replace granularity, directory-level."""
         if self.use_iceberg:
             ident = self.ident(table)
-            if not self.exists(table):
-                (
-                    df.writeTo(ident)
-                    .using("iceberg")
-                    .partitionedBy(F.col(bucket_col))
-                    .create()
-                )
-            else:
-                df.writeTo(ident).overwritePartitions()
+            with _ICEBERG_CREATE:
+                if not self.exists(table):
+                    (
+                        df.writeTo(ident)
+                        .using("iceberg")
+                        .partitionedBy(F.col(bucket_col))
+                        .create()
+                    )
+                    return
+            df.writeTo(ident).overwritePartitions()
             return
         (
             df.write.mode("overwrite")
@@ -167,13 +175,42 @@ class TableIO:
             )
             return
         fs, _ = self._fs(self.path(table))
-        jvm = self.spark._jvm
-        for b in buckets:
-            p = jvm.org.apache.hadoop.fs.Path(
-                f"{self.path(table)}/{bucket_col}={int(b)}"
-            )
+        for p in self._bucket_paths(table, buckets, bucket_col):
             if fs.exists(p):
                 fs.delete(p, True)
+
+    def read_buckets(
+        self, table: str, buckets: list[int], bucket_col: str = "bucket"
+    ) -> DataFrame | None:
+        """Rows of the given bucket partitions, or None when none of them
+        holds data. Parquet: reads only the `bucket=<b>` directories (with
+        `basePath`, so the bucket column survives) and never lists the table
+        root, where a concurrent dynamic overwrite of OTHER buckets may be
+        renaming directories. Iceberg: a partition-filtered snapshot read."""
+        if self.use_iceberg:
+            if not self.exists(table):
+                return None
+            return self.read(table).where(F.col(bucket_col).isin(buckets))
+        fs, _ = self._fs(self.path(table))
+        paths = [
+            p.toString()
+            for p in self._bucket_paths(table, buckets, bucket_col)
+            if fs.exists(p)
+        ]
+        if not paths:
+            return None
+        return self.spark.read.option("basePath", self.path(table)).parquet(
+            *paths
+        )
+
+    def _bucket_paths(self, table: str, buckets: list[int], bucket_col: str):
+        jvm = self.spark._jvm
+        return [
+            jvm.org.apache.hadoop.fs.Path(
+                f"{self.path(table)}/{bucket_col}={int(b)}"
+            )
+            for b in buckets
+        ]
 
 
 def save_bucketed(

@@ -13,6 +13,9 @@ test_bucketing.py.
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 
 from prove_spark.sources.tables import TableIO
@@ -174,3 +177,39 @@ def test_delete_buckets_empty_list_is_noop(io_and_logs):
     n = len(spark.sql_log)
     io.delete_buckets("triples", [])
     assert len(spark.sql_log) == n
+
+
+@pytest.mark.parametrize(
+    "method, second", [("overwrite_buckets", "overwritePartitions"), ("append", "append")]
+)
+def test_concurrent_first_writes_create_once(spark, method, second):
+    """Two bucket groups committing at once into a table that does not exist
+    yet: exactly one creates it, and the other writes into it. (The real
+    `spark` fixture is pulled in for overwrite_buckets' F.col.)"""
+    fake = FakeSpark()
+    io = TableIO(fake, "/tmp/wh", use_iceberg=True)
+    writes: list = []
+
+    class SlowCreate(FakeWriterV2):
+        def create(self):
+            time.sleep(0.2)  # the window a second exists() check races in
+            fake.catalog.tables.add(self.ident)
+            super().create()
+
+    class DF:
+        def writeTo(self, ident: str) -> SlowCreate:
+            return SlowCreate(writes, ident)
+
+    start = threading.Barrier(2, timeout=30)
+
+    def commit():
+        start.wait()
+        getattr(io, method)(DF(), "triples")
+
+    threads = [threading.Thread(target=commit) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert sorted(chain[-1] for _, chain in writes) == sorted(["create", second])
