@@ -19,9 +19,11 @@ or locally:
 
     python -m prove_spark.job --sf-dir /root/testdata/sf0.01 --warehouse /tmp/kg
 
-Resume: re-running with the same input + warehouse skips buckets already in
-the manifest (pipeline/checkpoint.py); a crash mid-bucket-group is repaired
-by the idempotent per-bucket overwrite on the next run.
+Resume: re-running with the same input + warehouse skips every bucket whose
+latest manifest row carries that bucket's current input fingerprint
+(pipeline/checkpoint.py); a crash mid-bucket-group is repaired by the
+idempotent per-bucket overwrite on the next run, and a rerun over changed
+input recomputes only the changed buckets.
 """
 
 from __future__ import annotations

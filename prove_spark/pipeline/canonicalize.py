@@ -1,16 +1,18 @@
-"""Entity canonicalization: connected components over same-as candidate edges.
+"""Entity canonicalization, and the connected-components core it shares.
 
-Alternating large-star/small-star (Kiveris et al. 2014, the GraphFrames/
-MapReduce CC algorithm) via plain DataFrame joins (no GraphFrames
-dependency), run to fixpoint in O(log diameter) rounds. Edges come from
-canonical-label equality plus seed same-as pairs (dictionaries.SAME_AS_SEED);
-component representative = minimum numeric QID, and triples are re-keyed to
-the representative with a broadcast join (the component map is an
-entity-dimension-sized table, always ≪ the fact table).
+The job's canonical map is a driver-side union-find (`union_find_local`)
+over same-as edges from the static entity dictionary: canonical-label
+equality plus seed same-as pairs (dictionaries.SAME_AS_SEED). The component
+representative is the minimum numeric QID, and triples are re-keyed to it
+with a broadcast join (the map is entity-dimension-sized, always ≪ the fact
+table). The dictionary is a literal, so building the map runs no Spark job.
 
-At 10^12-turn scale the iteration count is O(log D) on component diameter;
-each iteration is one self-join + one min-aggregation on the ENTITY
-dimension, not the fact table, so this never touches the heavy data.
+`connected_components_long` is the distributed CC for data-derived edge
+sets too large to collect (LSH near-dup clusters, kg_connected_components):
+alternating large-star/small-star (Kiveris et al. 2014, the GraphFrames/
+MapReduce CC algorithm) via plain DataFrame joins, run to fixpoint in
+O(log diameter) rounds, each one self-join + one min-aggregation on the
+edge set, never the corpus.
 """
 
 from __future__ import annotations
@@ -25,20 +27,6 @@ from ..dictionaries import ENTITIES, SAME_AS_SEED
 
 def entity_dim(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(pd.DataFrame(ENTITIES, columns=["qid", "label"]))
-
-
-def same_as_edges(spark: SparkSession) -> DataFrame:
-    """Candidate duplicate edges: identical canonical label, plus seeds."""
-    e = entity_dim(spark)
-    a = e.select(F.col("qid").alias("src"), "label")
-    b = e.select(F.col("qid").alias("dst"), "label")
-    label_edges = (
-        a.join(b, "label").where(F.col("src") < F.col("dst")).select("src", "dst")
-    )
-    seed = spark.createDataFrame(
-        pd.DataFrame(SAME_AS_SEED, columns=["src", "dst"])
-    )
-    return label_edges.unionByName(seed).distinct()
 
 
 def _qnum(col: str) -> F.Column:
@@ -91,7 +79,7 @@ def connected_components_long(
     O(log d) rounds on component diameter d — a 2^20-node chain finishes in
     ~20 rounds where min-label propagation needs 2^20. Each round is one
     self-join + one min-aggregation on the EDGE set (candidate-pair-sized,
-    never the corpus), so this also serves data-derived edge sets like LSH
+    never the corpus), so it serves data-derived edge sets like LSH
     near-dup candidates (plans/textops.py:dedup_lsh_clusters).
 
     If the loop exhausts max_iterations before the set-equality fixpoint,
@@ -99,8 +87,8 @@ def connected_components_long(
     FRAGMENTED (correct within, not across, the unresolved star forest).
     require_converged=True turns that silent truncation into a ValueError —
     callers whose contract is exactness against a fixpoint oracle
-    (plans/registry.py:kg_connected_components) set it; the pipeline default
-    stays lenient for parity with the previous behavior."""
+    (plans/registry.py:kg_connected_components) set it; the default stays
+    lenient for parity with the previous behavior."""
     cur = (
         edges_uv.select("u", "v")
         .unionByName(
@@ -142,44 +130,17 @@ def connected_components_long(
     return parent.unionByName(roots).distinct()
 
 
-def connected_components(
-    vertices: DataFrame, edges: DataFrame, max_iterations: int = DEFAULT_CONFIG.max_cc_iterations
-) -> DataFrame:
-    """vertices(qid) + edges(src,dst) → (qid, canonical_qid).
-
-    QID front-end over connected_components_long: numeric working ids (the
-    min-QID representative rule is numeric), then the star-forest root is
-    rendered back to a QID."""
-    sym_q = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    parent = connected_components_long(
-        sym_q.select(_qnum("src").alias("u"), _qnum("dst").alias("v")),
-        max_iterations,
-    )
-    verts = vertices.select("qid", _qnum("qid").alias("u"))
-    return (
-        verts.join(parent, "u", "left")
-        .select(
-            "qid",
-            F.concat(
-                F.lit("Q"),
-                F.coalesce(F.col("root"), F.col("u")).cast("string"),
-            ).alias("canonical_qid"),
-        )
-    )
-
-
 def union_find_local(qids: list[str], edges: list[tuple[str, str]]) -> dict[str, str]:
-    """Driver-side union-find for dimension-sized vertex sets.
+    """Driver-side union-find for dimension-sized vertex sets: the job's
+    canonicalization path.
 
     The entity dictionary is a broadcast-sized dimension (thousands–millions
     of rows, ≪ the fact table); running a distributed fixpoint over it costs
     O(iterations) blocking Spark jobs of pure scheduling overhead. Path-
-    compressed union-find on the driver is exact, O(E α(V)), and emits the
-    same (qid → min-numeric-QID representative) map as the distributed CC.
-    `connected_components` above remains the scale path for edge sets too
-    large to collect (e.g. data-derived same-as candidates at 100 TB).
+    compressed union-find on the driver is exact, O(E α(V)), and maps every
+    qid to its component's min-numeric-QID representative.
+    `connected_components_long` above is the path for edge sets too large
+    to collect.
     """
     from ..dictionaries import qid_num  # single source of the min-QID rule
 
@@ -201,15 +162,10 @@ def union_find_local(qids: list[str], edges: list[tuple[str, str]]) -> dict[str,
     return {q: find(q) for q in qids}
 
 
-def canonical_map_df(spark: SparkSession, distributed: bool = False) -> DataFrame:
-    """(qid, canonical_qid) map. Default: driver union-find over the static
-    entity dictionary (no Spark jobs — the dictionaries are literals);
-    distributed=True runs the iterative-join CC instead (the path a
-    data-derived, non-collectable edge set would take)."""
-    if distributed:
-        return connected_components(
-            entity_dim(spark).select("qid"), same_as_edges(spark)
-        )
+def canonical_map_df(spark: SparkSession) -> DataFrame:
+    """(qid, canonical_qid) map: driver union-find over the static entity
+    dictionary (no Spark jobs — the dictionaries are literals), built once
+    per session."""
     from ..sources.dims import session_dim
 
     return session_dim(spark, "canonical_map", _build_canonical_map)

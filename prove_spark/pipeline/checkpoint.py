@@ -10,11 +10,19 @@ per-partition lineage + metrics"):
   resume on different parallelism reuses completed work.
 - After each bucket group commits, a manifest row (bucket, n_rows,
   n_convs, wall_sec, input_fingerprint, completed_ts) is appended to the
-  `manifest` table — that is the lineage + metrics record.
-- Resume = anti-join: buckets in the manifest (for the same input
-  fingerprint) are skipped; remaining buckets are recomputed and written
-  with idempotent per-bucket dynamic-partition overwrite, so a crash
-  mid-bucket can only produce a bucket that is later fully replaced.
+  `manifest` table per bucket — that is the lineage + metrics record. Its
+  `input_fingerprint` is the fingerprint of that bucket's input rows only.
+- One rule decides what to recompute: a bucket is done when its LATEST
+  manifest row carries the bucket's current fingerprint. So a rerun over
+  the same input skips everything, a crash resumes with the buckets that
+  never committed, and a rerun over changed input recomputes only the
+  buckets whose input changed. The latest row wins, not any matching row:
+  after an edit and its revert an older row matches the input again while
+  the files still hold the edit.
+- Each group deletes its own buckets' files before it overwrites them
+  (dynamic partition overwrite replaces only buckets present in the new
+  output, so a recomputed bucket that yields no rows would otherwise keep
+  stale files), and touches no other group's buckets.
 - Two bucket groups are in flight at once: each group's plan, eager cache
   fill and triples write run on a driver thread pool of width
   `_GROUPS_IN_FLIGHT` (2), so one group's serial driver work overlaps the
@@ -50,37 +58,40 @@ MANIFEST_SCHEMA = (
 # own cached intermediates: 2 keeps the gain and bounds memory.
 _GROUPS_IN_FLIGHT = 2
 
-
-def input_fingerprint(transcripts: DataFrame) -> str:
-    """Order-insensitive content fingerprint of the input slice (cheap agg).
-
-    Pins a manifest to its exact input: resume against changed input recomputes
-    everything rather than mixing snapshots.
-    """
-    row = transcripts.select(
-        F.bit_xor(F.xxhash64("conv_id", "turn_idx", "text")).alias("h"),
-        F.count("*").alias("n"),
-    ).first()
-    return f"{row.h}:{row.n}"
+# fingerprint of a bucket with no input rows
+_EMPTY_BUCKET = "0:0"
 
 
-def _manifest_lineage(io: TableIO) -> list[tuple[int, str]]:
-    """Distinct (bucket, input_fingerprint) pairs of the manifest: one
-    bucket-scale collect that answers both "is any row from other input?"
-    and "which buckets are done?"."""
-    if not io.exists("manifest"):
-        return []
+def input_fingerprint(transcripts: DataFrame, n_buckets: int) -> dict[int, str]:
+    """Order-insensitive content fingerprint "h:n" of each bucket's input
+    rows, from one aggregation; a bucket with no input rows gets
+    `_EMPTY_BUCKET`. Pins each manifest row to its bucket's exact input."""
     rows = (
-        io.read("manifest")
-        .select("bucket", "input_fingerprint")
-        .distinct()
+        with_bucket(transcripts, "conv_id", n_buckets)
+        .groupBy("bucket")
+        .agg(
+            F.bit_xor(F.xxhash64("conv_id", "turn_idx", "text")).alias("h"),
+            F.count("*").alias("n"),
+        )
         .collect()
     )
-    return [(r.bucket, r.input_fingerprint) for r in rows]
+    fps = dict.fromkeys(range(n_buckets), _EMPTY_BUCKET)
+    fps.update((r.bucket, f"{r.h}:{r.n}") for r in rows)
+    return fps
 
 
-def completed_buckets(io: TableIO, fingerprint: str) -> set[int]:
-    return {b for b, f in _manifest_lineage(io) if f == fingerprint}
+def completed_buckets(io: TableIO, fingerprints: dict[int, str]) -> set[int]:
+    """Buckets whose LATEST manifest row carries their current fingerprint
+    (one bucket-scale collect)."""
+    if not io.exists("manifest"):
+        return set()
+    rows = (
+        io.read("manifest")
+        .groupBy("bucket")
+        .agg(F.max_by("input_fingerprint", "completed_ts").alias("fp"))
+        .collect()
+    )
+    return {r.bucket for r in rows if fingerprints.get(r.bucket) == r.fp}
 
 
 def run_checkpointed(
@@ -91,40 +102,29 @@ def run_checkpointed(
     bucket_groups: int = 4,
     fail_after_groups: int | None = None,
 ) -> DataFrame:
-    """Build triples with per-bucket-group checkpointing; returns the final
-    triples table reader.
+    """Build or refresh triples with per-bucket-group checkpointing; returns
+    the final triples table reader. Only the buckets that
+    `completed_buckets` does not vouch for are recomputed: all of them on a
+    fresh warehouse, the uncommitted ones after a crash, the changed ones
+    after an input change, none on a rerun over the same input.
 
-    bucket_groups: how many commit units the n_buckets are folded into (each
-    commit = one Spark write over a subset of conversations + one manifest
-    append). Two groups are in flight at once (`_GROUPS_IN_FLIGHT`: wider
-    measured no faster and holds more cached intermediates), so a group
-    plans and extracts while the one before it writes. Only this thread
-    appends to the manifest, one commit per finished group, in completion
-    order. fail_after_groups: test hook — raise after k manifest commits to
+    bucket_groups: how many commit units the buckets to recompute are
+    folded into (each commit = one Spark write over a subset of
+    conversations + one manifest append). Two groups are in flight at once
+    (`_GROUPS_IN_FLIGHT`: wider measured no faster and holds more cached
+    intermediates), so a group plans and extracts while the one before it
+    writes. When the triples table exists, each group deletes its own
+    buckets' files before its write. Only this thread appends to the
+    manifest, one commit per finished group, in completion order.
+    fail_after_groups: test hook — raise after k manifest commits to
     simulate a mid-run crash; groups not yet started are cancelled, and a
     group already in flight may still write its triples without a manifest
     row, which resume recomputes.
     """
     io = TableIO(spark, warehouse)
-    fp = input_fingerprint(transcripts)
-    lineage = _manifest_lineage(io)
-    if any(f != fp for _, f in lineage):
-        # Changed input ⇒ fresh run: dynamic partition overwrite only
-        # replaces buckets PRESENT in the new output, so a bucket that
-        # produced rows under the old input but none under the new one would
-        # otherwise survive and mix snapshots. Wipe both tables when any
-        # manifest row carries a different fingerprint.
-        io.drop("triples")
-        io.drop("manifest")
-        lineage = []
-    elif not lineage and io.exists("triples"):
-        # Orphaned data: a crash between overwrite_buckets and the manifest
-        # append leaves triples with no manifest. Nothing proves those files
-        # came from THIS input, and with no manifest rows every bucket reads
-        # as not-done — so the fingerprint-mismatch wipe above can never
-        # fire. Wipe unconditionally; the rerun recomputes everything.
-        io.drop("triples")
-    done = {b for b, _ in lineage}
+    fps = input_fingerprint(transcripts, config.n_buckets)
+    done = completed_buckets(io, fps)
+    replace = io.exists("triples")
 
     bucketed = with_bucket(transcripts, "conv_id", config.n_buckets)
     groups = [
@@ -140,13 +140,13 @@ def run_checkpointed(
         running = {
             pool.submit(
                 _on_pool_thread(spark, _write_group),
-                spark, io, bucketed, todo, config,
+                spark, io, bucketed, todo, config, replace,
             ): todo
             for todo in groups
             if todo
         }
         for committed, fut in enumerate(as_completed(running), 1):
-            _append_bucket_manifest(spark, io, running[fut], fut.result(), fp)
+            _append_bucket_manifest(spark, io, running[fut], fut.result(), fps)
             if fail_after_groups is not None and committed >= fail_after_groups:
                 raise RuntimeError(
                     f"simulated failure after {committed} commits"
@@ -180,9 +180,12 @@ def _write_group(
     bucketed: DataFrame,
     buckets: list[int],
     config: PipelineConfig,
+    replace: bool,
 ) -> float:
     """Plan, build and write one bucket group's triples; returns its wall
-    seconds. Its cached intermediates are dropped before it returns."""
+    seconds. With `replace`, the group's old bucket files are deleted
+    before the write, so a bucket that now yields no rows keeps none. Its
+    cached intermediates are dropped before it returns."""
     from .run import build_triples
 
     t0 = time.time()
@@ -194,6 +197,8 @@ def _write_group(
         cache_registry=caches,
     )
     out = with_bucket(triples, "conv_id", config.n_buckets)
+    if replace:
+        io.delete_buckets("triples", buckets)
     io.overwrite_buckets(out, "triples", "bucket")
     for df in caches:
         df.unpersist()
@@ -218,15 +223,20 @@ def _read_triples_or_empty(spark: SparkSession, io: TableIO) -> DataFrame:
 
 
 def _append_bucket_manifest(
-    spark: SparkSession, io: TableIO, buckets: list[int], wall: float, fp: str
+    spark: SparkSession,
+    io: TableIO,
+    buckets: list[int],
+    wall: float,
+    fingerprints: dict[int, str],
 ) -> None:
-    """Append one lineage row per bucket, with stats read back from the
-    files just WRITTEN (recomputing the output frame would re-run the whole
-    pipeline for the group). The read-back lists only these buckets'
-    partitions: another group's commit may be moving other partitions at
-    the same moment. Buckets whose write produced zero rows — or a table
-    whose every file was just deleted — still get rows, with zero stats.
-    The rows are written as one partition, so one file per commit."""
+    """Append one lineage row per bucket, carrying that bucket's input
+    fingerprint, with stats read back from the files just WRITTEN
+    (recomputing the output frame would re-run the whole pipeline for the
+    group). The read-back lists only these buckets' partitions: another
+    group's commit may be moving other partitions at the same moment.
+    Buckets whose write produced zero rows — or a table whose every file
+    was just deleted — still get rows, with zero stats. The rows are
+    written as one partition, so one file per commit."""
     written = io.read_buckets("triples", buckets)
     stats = (
         []
@@ -247,7 +257,7 @@ def _append_bucket_manifest(
                 int(by_bucket[b].n_rows) if b in by_bucket else 0,
                 int(by_bucket[b].n_convs) if b in by_bucket else 0,
                 wall,
-                fp,
+                fingerprints[b],
                 now,
             )
             for b in buckets  # empty buckets still get lineage rows
@@ -264,78 +274,26 @@ def incremental_update(
     warehouse: str,
     config: PipelineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Targeted refresh of an existing triples table: recompute ONLY the
-    buckets containing changed conversations, leaving every other bucket's
-    files untouched. The incremental-maintenance counterpart to
-    [run_checkpointed]'s full build (whose fingerprint check treats ANY
-    input change as a fresh run) — when a day's delta lands in a 100 TB
+    """Refresh an existing triples table to `transcripts_now`: the one
+    commit of [run_checkpointed] over it, which recomputes only the buckets
+    whose input fingerprint changed (added, updated and deleted
+    conversations all change their bucket's fingerprint) and leaves every
+    other bucket's files untouched. When a day's delta lands in a 100 TB
     corpus, cost is proportional to the delta's bucket footprint, not the
     corpus.
 
-    `changed_conv_ids` (one `conv_id` column) must list ADDED, UPDATED and
-    DELETED conversations — a deletion is only reflected by recomputing its
-    bucket from `transcripts_now` (which no longer contains it). The bucket
-    id is the same stable pmod(xxhash64(conv_id)) the full build lays files
-    out by, so at scale the `transcripts_now` read prunes to the touched
-    partitions when the transcript lake shares that layout.
-
-    Correctness details: a touched bucket whose recompute yields zero rows
-    is explicitly deleted (dynamic partition overwrite only replaces
-    partitions present in the NEW output — stale files would survive
-    otherwise); manifest rows are appended for every touched bucket with
-    the new input fingerprint, so per-bucket lineage records when each
-    bucket was last written. After an incremental update the manifest
-    intentionally carries mixed fingerprints — a subsequent
-    run_checkpointed sees that as changed input and does a full rebuild,
-    never mixing snapshots silently."""
-    from .run import build_triples
-
+    `changed_conv_ids` is not consulted: the fingerprints find the changed
+    buckets, so a list that misses a change cannot leave a stale bucket
+    behind. The argument stays for callers that pass it."""
     io = TableIO(spark, warehouse)
     if not io.exists("triples") or not io.exists("manifest"):
         raise ValueError(
             "incremental_update needs an existing triples+manifest table; "
             "run run_checkpointed first"
         )
-    # touched bucket ids: manifest-scale (<= n_buckets ints) — safe collect
-    touched = sorted(
-        r.bucket
-        for r in with_bucket(changed_conv_ids, "conv_id", config.n_buckets)
-        .select("bucket")
-        .distinct()
-        .collect()
+    return run_checkpointed(
+        spark, transcripts_now, warehouse, config, bucket_groups=1
     )
-    if not touched:
-        return io.read("triples")
-    fp = input_fingerprint(transcripts_now)
-    t0 = time.time()
-    bucketed = with_bucket(transcripts_now, "conv_id", config.n_buckets)
-    caches: list = []
-    triples = build_triples(
-        spark,
-        bucketed.where(F.col("bucket").isin(touched)).drop("bucket"),
-        config,
-        cache_registry=caches,
-    )
-    out = with_bucket(triples, "conv_id", config.n_buckets).persist()
-    io.overwrite_buckets(out, "triples", "bucket")
-    # buckets the NEW output produced rows for (bucket-scale collect) — this
-    # must come from `out`, NOT a read-back of the table: a touched bucket
-    # that went empty still has its stale partition on disk at this point
-    # (dynamic overwrite never saw it) and a read-back would count it as
-    # written, which is exactly the stale state the delete exists to fix
-    written = {
-        int(r.bucket) for r in out.select("bucket").distinct().collect()
-    }
-    out.unpersist()
-    io.delete_buckets("triples", [b for b in touched if b not in written])
-    for df in caches:
-        df.unpersist()
-    # the stats read-back and the final read both guard against a missing
-    # table: a delta that empties EVERY remaining bucket leaves a triples
-    # dir with no parquet files (only _SUCCESS), which a raw read cannot
-    # infer a schema from — same fallback run_checkpointed uses
-    _append_bucket_manifest(spark, io, touched, time.time() - t0, fp)
-    return _read_triples_or_empty(spark, io)
 
 
 def stage_metrics(io: TableIO) -> DataFrame:

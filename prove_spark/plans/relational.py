@@ -71,6 +71,23 @@ def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
         return default
 
 
+def _data_file_sizes(path: str) -> list[int] | None:
+    """Byte sizes of a LOCAL table's data files: the file itself, or every
+    file under a directory table (Spark's own output layout) except
+    `_`/`.`-prefixed metadata and `.crc` checksums. None for paths this
+    cannot size (non-local filesystems)."""
+    if os.path.isfile(path):
+        return [os.path.getsize(path)]
+    if not os.path.isdir(path):
+        return None
+    return [
+        os.path.getsize(os.path.join(root, f))
+        for root, _dirs, files in os.walk(path)
+        for f in files
+        if not f.startswith(("_", ".")) and not f.endswith(".crc")
+    ]
+
+
 def _estimate_scan_splits(spark: SparkSession, path: str) -> int | None:
     """Expected scan partition count from LOCAL file sizes, mirroring
     Spark's FilePartition math (maxSplitBytes = min(maxPartitionBytes,
@@ -80,19 +97,8 @@ def _estimate_scan_splits(spark: SparkSession, path: str) -> int | None:
     the count against the core count to decide a small-input fan-out, and
     near the boundary either decision is fine. Returns None for paths this
     cannot size (non-local filesystems), sending the caller to the probe."""
-    import os
-
-    sizes: list[int] = []
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            sizes.extend(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith(("_", ".")) and not f.endswith(".crc")
-            )
-    elif os.path.isfile(path):
-        sizes = [os.path.getsize(path)]
-    else:
+    sizes = _data_file_sizes(path)
+    if sizes is None:
         return None
     if not sizes:
         return 0
@@ -196,16 +202,13 @@ def _fan_out_for_window(
     if _scan_partitions(spark, df) >= target:
         return df
     path = _TABLE_PATHS.get((spark.sparkContext.applicationId, id(df)))
-    if path is not None:
-        try:
-            total = os.path.getsize(path)
-        except OSError:
-            total = None
-        if total is not None:
-            if total < _FANOUT_MIN_BYTES:
-                return df
-            width = -(-total // _FANOUT_SPLIT_TARGET_BYTES)
-            target = max(2, min(target, width))
+    sizes = _data_file_sizes(path) if path is not None else None
+    if sizes is not None:
+        total = sum(sizes)
+        if total < _FANOUT_MIN_BYTES:
+            return df
+        width = -(-total // _FANOUT_SPLIT_TARGET_BYTES)
+        target = max(2, min(target, width))
     return df.repartition(target, *keys)
 
 

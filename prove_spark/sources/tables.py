@@ -159,12 +159,14 @@ class TableIO:
     def delete_buckets(
         self, table: str, buckets: list[int], bucket_col: str = "bucket"
     ) -> None:
-        """Drop specific bucket partitions. Needed by incremental update:
+        """Drop specific bucket partitions. Each bucket group of the
+        checkpointed build drops its own buckets before it overwrites them:
         dynamic partition overwrite only replaces partitions PRESENT in the
         new output, so a recomputed bucket that now yields zero rows would
         otherwise keep its stale files. Iceberg: a partition-predicate
         DELETE (metadata-level drop on a bucket-partitioned table). Parquet:
-        remove the `bucket=<b>` directories."""
+        remove the `bucket=<b>` directories, and no other path, so a
+        concurrent commit of other buckets is not disturbed."""
         if not buckets:
             return
         if self.use_iceberg:

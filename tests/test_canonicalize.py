@@ -1,20 +1,10 @@
-"""Connected-components canonicalization vs union-find oracle."""
+"""Entity canonicalization vs the union-find oracle, and the distributed
+connected-components core."""
 
 from __future__ import annotations
 
 from prove_spark.oracle import canonical_map
 from prove_spark.pipeline.canonicalize import canonical_map_df
-
-
-def test_distributed_cc_matches_union_find(spark):
-    """The iterative-join CC (scale path for non-collectable edge sets) must
-    agree with the union-find oracle."""
-    got = {
-        r.qid: r.canonical_qid
-        for r in canonical_map_df(spark, distributed=True).collect()
-    }
-    want = canonical_map()
-    assert got == want
 
 
 def test_local_union_find_matches_oracle(spark):
@@ -37,40 +27,32 @@ def test_cc_long_chain_converges_in_log_rounds(spark):
     rounds and silently return a half-merged component)."""
     import pandas as pd
 
-    from prove_spark.pipeline.canonicalize import connected_components
+    from prove_spark.pipeline.canonicalize import connected_components_long
 
     n = 64
-    qids = [f"Q{i}" for i in range(1, n + 1)]
-    verts = spark.createDataFrame(pd.DataFrame({"qid": qids}))
     edges = spark.createDataFrame(
-        pd.DataFrame(
-            [(f"Q{i}", f"Q{i + 1}") for i in range(1, n)], columns=["src", "dst"]
-        )
+        pd.DataFrame([(i, i + 1) for i in range(1, n)], columns=["u", "v"])
     )
-    got = {r.qid: r.canonical_qid for r in connected_components(verts, edges).collect()}
-    assert got == {q: "Q1" for q in qids}
+    got = {
+        r.u: r.root
+        for r in connected_components_long(edges, require_converged=True).collect()
+    }
+    assert got == {i: 1 for i in range(1, n + 1)}
 
 
 def test_cc_star_forest_mixed_components(spark):
-    """Multiple components of different shapes resolve to their min QIDs."""
+    """Multiple components of different shapes resolve to their min ids."""
     import pandas as pd
 
-    from prove_spark.pipeline.canonicalize import connected_components
+    from prove_spark.pipeline.canonicalize import connected_components_long
 
-    verts = spark.createDataFrame(
-        pd.DataFrame({"qid": [f"Q{i}" for i in [1, 2, 3, 10, 11, 12, 99]]})
-    )
     edges = spark.createDataFrame(
-        pd.DataFrame(
-            [("Q2", "Q3"), ("Q1", "Q3"), ("Q12", "Q10"), ("Q11", "Q12")],
-            columns=["src", "dst"],
-        )
+        pd.DataFrame([(2, 3), (1, 3), (12, 10), (11, 12)], columns=["u", "v"])
     )
-    got = {r.qid: r.canonical_qid for r in connected_components(verts, edges).collect()}
+    got = {r.u: r.root for r in connected_components_long(edges).collect()}
     assert got == {
-        "Q1": "Q1", "Q2": "Q1", "Q3": "Q1",
-        "Q10": "Q10", "Q11": "Q10", "Q12": "Q10",
-        "Q99": "Q99",
+        1: 1, 2: 1, 3: 1,
+        10: 10, 11: 10, 12: 10,
     }
 
 

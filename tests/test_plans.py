@@ -129,12 +129,14 @@ def test_scan_rebalance_is_noop_on_parallel_input(spark):
     assert out is df
 
 
-def test_window_fanout_byte_floor(spark, monkeypatch):
+def test_window_fanout_byte_floor(spark, monkeypatch, tmp_path):
     """The pre-window fan-out fires only when the concentrated scan carries
     enough bytes for the serial sort to dominate an extra shuffle wave
     (r6 byte floor): a dictionary-scale table must come back untouched, the
-    same table must repartition once the floor is lowered to zero, and an
-    already-parallel input must stay untouched regardless of size."""
+    same table must repartition once the floor is lowered to zero, a
+    directory-layout table must be sized by its data files (not by the
+    directory entry), and an already-parallel input must stay untouched
+    regardless of size."""
     import prove_spark.plans.relational as R
 
     events = R._t(spark, SF, "events")  # ~30 KB at sf0.001: below any floor
@@ -144,6 +146,22 @@ def test_window_fanout_byte_floor(spark, monkeypatch):
     if spark.sparkContext.defaultParallelism > 1:
         out = R._fan_out_for_window(spark, events, "user_id")
         assert out is not events
+        assert "hashpartitioning(user_id" in plan_of(out)
+
+        # the same rows as a directory table (Spark's write layout), with
+        # the floor at exactly its data bytes: sized right, it fans out
+        import glob
+        import os
+
+        dir_sf = str(tmp_path / "dir_sf")
+        events.coalesce(1).write.parquet(f"{dir_sf}/events.parquet")
+        data_bytes = sum(
+            os.path.getsize(p) for p in glob.glob(f"{dir_sf}/events.parquet/*.parquet")
+        )
+        monkeypatch.setattr(R, "_FANOUT_MIN_BYTES", data_bytes)
+        dir_events = R._t(spark, dir_sf, "events")
+        out = R._fan_out_for_window(spark, dir_events, "user_id")
+        assert out is not dir_events
         assert "hashpartitioning(user_id" in plan_of(out)
 
     from pyspark.sql import functions as F

@@ -24,6 +24,12 @@ def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def _latest_fingerprints(io: TableIO) -> dict[int, str]:
+    m = io.read("manifest").toPandas()
+    latest = m.sort_values("completed_ts", kind="stable").groupby("bucket").tail(1)
+    return dict(zip(latest.bucket, latest.input_fingerprint))
+
+
 def test_resume_after_failure(spark, spark_transcripts, tmp_path):
     full_wh = str(tmp_path / "full")
     resume_wh = str(tmp_path / "resumed")
@@ -35,17 +41,18 @@ def test_resume_after_failure(spark, spark_transcripts, tmp_path):
             spark, spark_transcripts, resume_wh, fail_after_groups=2
         )
     io = TableIO(spark, resume_wh)
-    fp = input_fingerprint(spark_transcripts)
-    done_before = completed_buckets(io, fp)
+    fps = input_fingerprint(spark_transcripts, 32)
+    done_before = completed_buckets(io, fps)
     assert 0 < len(done_before) < 32  # partial progress was checkpointed
 
     resumed = run_checkpointed(spark, spark_transcripts, resume_wh).toPandas()
     assert _canon(resumed).equals(_canon(full))
 
-    # lineage: every bucket has metrics, all pinned to the input fingerprint
+    # lineage: every bucket has metrics, each row pinned to its bucket's
+    # input fingerprint
     m = stage_metrics(io).toPandas()
     assert set(m.bucket) == set(range(32))
-    assert (m.input_fingerprint == fp).all()
+    assert (m.input_fingerprint == m.bucket.map(fps)).all()
     assert m.n_rows.sum() == len(full)
 
 
@@ -61,11 +68,12 @@ def test_resume_noop_when_complete(spark, spark_transcripts, tmp_path):
 
 
 def test_fingerprint_changes_with_input(spark, spark_transcripts):
-    fp1 = input_fingerprint(spark_transcripts)
+    fp1 = input_fingerprint(spark_transcripts, 32)
     fp2 = input_fingerprint(
         spark_transcripts.withColumn(
             "text", F.concat(F.col("text"), F.lit(" x"))
-        )
+        ),
+        32,
     )
     assert fp1 != fp2
 
@@ -88,9 +96,8 @@ def test_changed_input_wipes_stale_buckets(spark, spark_transcripts, tmp_path):
     out = run_checkpointed(spark, one_conv, wh).toPandas()
     new_buckets = {r.bucket for r in io.read("triples").select("bucket").distinct().collect()}
     assert len(new_buckets) <= 1  # ONLY the new input's bucket survives
-    # manifest holds only the new fingerprint
-    fps = {r.input_fingerprint for r in io.read("manifest").select("input_fingerprint").distinct().collect()}
-    assert fps == {input_fingerprint(one_conv)}
+    # the latest row of every bucket carries the new input's fingerprint
+    assert _latest_fingerprints(io) == input_fingerprint(one_conv, 32)
     # and the triples are exactly the single conversation's
     assert set(out.conv_id.unique()) == {one_conv.first().conv_id}
 
@@ -166,10 +173,57 @@ def test_incremental_update_matches_full_rebuild(
         if bucket not in touched:
             assert after.get(p) == mtime, f"untouched bucket rewritten: {p}"
 
-    # manifest now carries mixed fingerprints -> a later full run rebuilds
+    # one mechanism: a later full run over the same input finds every
+    # bucket done, so it appends no manifest row and rewrites no file
     io = TableIO(spark, wh)
-    fps = {r.input_fingerprint for r in io.read("manifest").collect()}
-    assert len(fps) == 2
+    n_manifest_rows = io.read("manifest").count()
+    again = run_checkpointed(spark, t1, wh).toPandas()
+    assert _canon(again).equals(_canon(expected))
+    assert io.read("manifest").count() == n_manifest_rows
+    assert file_state(wh) == after
+
+
+def test_edit_then_revert_restores_original(spark, spark_transcripts, tmp_path):
+    """Edit a conversation, then revert it: the output must equal the
+    original run's. After the revert an OLDER manifest row of the edited
+    bucket matches the input again while its files hold the edit, so only
+    the bucket's latest row may count."""
+    wh = str(tmp_path / "revert")
+    original = run_checkpointed(spark, spark_transcripts, wh).toPandas()
+    victim = original.conv_id.iloc[0]
+    edited = spark_transcripts.withColumn(
+        "text",
+        F.when(F.col("conv_id") == victim, F.lit("nothing to see here.")).otherwise(
+            F.col("text")
+        ),
+    )
+    mid = run_checkpointed(spark, edited, wh).toPandas()
+    assert victim not in set(mid.conv_id)  # the edit changed the output
+    reverted = run_checkpointed(spark, spark_transcripts, wh).toPandas()
+    assert _canon(reverted).equals(_canon(original))
+
+
+def test_whole_input_manifest_resumes(spark, spark_transcripts, tmp_path):
+    """A manifest written before per-bucket fingerprints carries the whole
+    input's fingerprint on every row. Rerunning over it must give the
+    output of a fresh build, and leave per-bucket fingerprints as the
+    latest rows."""
+    from prove_spark.pipeline.checkpoint import MANIFEST_SCHEMA
+
+    wh = str(tmp_path / "old_manifest")
+    fresh = run_checkpointed(spark, spark_transcripts, wh).toPandas()
+    io = TableIO(spark, wh)
+    whole = spark_transcripts.select(
+        F.bit_xor(F.xxhash64("conv_id", "turn_idx", "text")).alias("h"),
+        F.count("*").alias("n"),
+    ).first()
+    old = io.read("manifest").toPandas()
+    old["input_fingerprint"] = f"{whole.h}:{whole.n}"
+    io.overwrite(spark.createDataFrame(old, schema=MANIFEST_SCHEMA), "manifest")
+
+    resumed = run_checkpointed(spark, spark_transcripts, wh).toPandas()
+    assert _canon(resumed).equals(_canon(fresh))
+    assert _latest_fingerprints(io) == input_fingerprint(spark_transcripts, 32)
 
 
 def test_incremental_update_deletes_emptied_bucket(spark, spark_transcripts, tmp_path):
