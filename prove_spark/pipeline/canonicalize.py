@@ -8,7 +8,7 @@ with a broadcast join (the map is entity-dimension-sized, always ≪ the fact
 table). The dictionary is a literal, so building the map runs no Spark job.
 
 `connected_components_long` is the distributed CC for data-derived edge
-sets too large to collect (LSH near-dup clusters, kg_connected_components):
+sets too large to collect (the LSH near-dup clusters of plans/textops.py):
 alternating large-star/small-star (Kiveris et al. 2014, the GraphFrames/
 MapReduce CC algorithm) via plain DataFrame joins, run to fixpoint in
 O(log diameter) rounds, each one self-join + one min-aggregation on the
@@ -27,10 +27,6 @@ from ..dictionaries import ENTITIES, SAME_AS_SEED
 
 def entity_dim(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(pd.DataFrame(ENTITIES, columns=["qid", "label"]))
-
-
-def _qnum(col: str) -> F.Column:
-    return F.regexp_extract(col, r"(\d+)", 1).cast("long")
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -85,10 +81,9 @@ def connected_components_long(
     If the loop exhausts max_iterations before the set-equality fixpoint,
     the min-aggregation still emits a label per node but components may be
     FRAGMENTED (correct within, not across, the unresolved star forest).
-    require_converged=True turns that silent truncation into a ValueError —
-    callers whose contract is exactness against a fixpoint oracle
-    (plans/registry.py:kg_connected_components) set it; the default stays
-    lenient for parity with the previous behavior."""
+    require_converged=True turns that silent truncation into a ValueError,
+    for callers whose contract is exactness against a fixpoint oracle; the
+    default stays lenient for parity with the previous behavior."""
     cur = (
         edges_uv.select("u", "v")
         .unionByName(

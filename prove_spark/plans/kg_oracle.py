@@ -477,70 +477,11 @@ FROM pr_r{PAGERANK_ITERS} r LEFT JOIN pr_out o ON o.src = r.entity"""
     return sql
 
 
-HITS_ITERS = 6
-
-
-def kg_hits_sql() -> str:
-    """HITS (Kleinberg 1999) oracle over the constructed triple graph: the
-    Spark side's HITS_ITERS mutual-recursion rounds unrolled as a CTE chain
-    (hub_{t-1} → auth_t → hub_t). L1 normalization by the exact DECIMAL
-    total deliberately replaces the textbook L2 norm — sqrt() is a libm
-    call and NOT bit-identical across engines, while sum-normalization is
-    one correctly-rounded IEEE division of two exactly-computed values
-    (same reason kg_link_prediction scores Jaccard, not Adamic-Adar).
-    Arithmetic discipline mirrors kg_pagerank: per-node sums through
-    DECIMAL(28,14), every iteration's scores quantized to the 1e-12 grid."""
-    sql = (
-        _kg_ctes()
-        + """,
-ht_edges AS MATERIALIZED (SELECT DISTINCT subj AS src, obj AS dst FROM triples WHERE subj <> obj),
-ht_nodes AS MATERIALIZED (SELECT subj AS entity FROM triples UNION SELECT obj AS entity FROM triples),
-ht_h0 AS MATERIALIZED (SELECT entity, CAST(1.0 AS DOUBLE) AS hub FROM ht_nodes)"""
-    )
-    # MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and each
-    # half-round references its raw-sum CTE twice (total + per-node join)
-    # — inlined, the documents→triples chain re-expands ~2^(2·ITERS) times
-    # and the planner exhausts file handles before it exhausts memory
-    for t in range(1, HITS_ITERS + 1):
-        sql += f""",
-ht_ar{t} AS MATERIALIZED (
-  SELECT e.dst, SUM(CAST(h.hub AS DECIMAL(28,14))) AS s
-  FROM ht_edges e JOIN ht_h{t - 1} h ON h.entity = e.src GROUP BY e.dst),
-ht_a{t} AS MATERIALIZED (
-  SELECT n.entity,
-         {_pr_qz('COALESCE(CAST(c.s AS DOUBLE), CAST(0.0 AS DOUBLE))'
-                 f' / CAST(x.tot AS DOUBLE)')} AS auth
-  FROM ht_nodes n
-  CROSS JOIN (SELECT SUM(s) AS tot FROM ht_ar{t}) x
-  LEFT JOIN ht_ar{t} c ON c.dst = n.entity),
-ht_hr{t} AS MATERIALIZED (
-  SELECT e.src, SUM(CAST(a.auth AS DECIMAL(28,14))) AS s
-  FROM ht_edges e JOIN ht_a{t} a ON a.entity = e.dst GROUP BY e.src),
-ht_h{t} AS MATERIALIZED (
-  SELECT n.entity,
-         {_pr_qz('COALESCE(CAST(c.s AS DOUBLE), CAST(0.0 AS DOUBLE))'
-                 f' / CAST(x.tot AS DOUBLE)')} AS hub
-  FROM ht_nodes n
-  CROSS JOIN (SELECT SUM(s) AS tot FROM ht_hr{t}) x
-  LEFT JOIN ht_hr{t} c ON c.src = n.entity)"""
-    sql += f"""
-SELECT a.entity, a.auth AS authority, h.hub AS hub_score,
-       CAST(COALESCE(i.ideg, 0) AS BIGINT) AS in_degree,
-       CAST(COALESCE(o.odeg, 0) AS BIGINT) AS out_degree
-FROM ht_a{HITS_ITERS} a
-JOIN ht_h{HITS_ITERS} h ON h.entity = a.entity
-LEFT JOIN (SELECT dst, COUNT(*) AS ideg FROM ht_edges GROUP BY dst) i
-  ON i.dst = a.entity
-LEFT JOIN (SELECT src, COUNT(*) AS odeg FROM ht_edges GROUP BY src) o
-  ON o.src = a.entity"""
-    return sql
-
-
 def _und_cte(p: str) -> str:
     """The `{p}_und` CTE: canonical undirected (a < b) distinct edge set of
     the entity graph — the SQL twin of registry._kg_undirected_edges, defined
-    ONCE here so the graph oracles (tri/lp/kc/bfs/cc) cannot drift from the
-    Spark-side derivation or from each other."""
+    ONCE here so the triangle and label-propagation oracles cannot drift
+    from the Spark-side derivation or from each other."""
     return f"""{p}_und AS MATERIALIZED (
   SELECT DISTINCT LEAST(subj, obj) AS a, GREATEST(subj, obj) AS b
   FROM triples WHERE subj <> obj)"""
@@ -667,279 +608,6 @@ SELECT d.canonical_qid, d.label, d.member_qids,
 FROM dim d
 LEFT JOIN subj_stats s USING (canonical_qid)
 LEFT JOIN obj_stats o USING (canonical_qid)"""
-    )
-
-
-KCORE_ITERS = 16  # testdata fixpoint at 11 rounds (probed); extra rounds are
-# no-ops because the h-operator is monotone non-increasing and fixpoint-stable
-
-
-def kg_coreness_sql() -> str:
-    """Coreness oracle over the KG entity graph: the Spark side's fixed-round
-    h-index iteration (Lü et al. 2016 — c(v) initialized to degree, each
-    round replaced by the H-index of the neighbors' current values; the
-    unique fixpoint is the exact k-core number) unrolled as a CTE chain.
-    H-index via the sorted-rank trick: with neighbor values x ranked
-    descending by r, H = MAX(LEAST(x, r)). Integer-only — no float parity
-    concerns. Defined on the edge-induced node set (self-loops dropped with
-    the undirected edge derivation, so isolated nodes don't appear)."""
-    sql = (
-        _kg_ctes()
-        + f""",
-{_und_cte("kc")},
-kc_nbr AS MATERIALIZED (SELECT a AS src, b AS dst FROM kc_und
-           UNION ALL SELECT b AS src, a AS dst FROM kc_und),
-kc_deg AS MATERIALIZED (SELECT src AS v, COUNT(*) AS deg FROM kc_nbr GROUP BY src),
-kc_c0 AS MATERIALIZED (SELECT v, deg AS c FROM kc_deg)"""
-    )
-    for t in range(1, KCORE_ITERS + 1):
-        sql += f""",
-kc_c{t} AS MATERIALIZED (
-  SELECT v, MAX(LEAST(x, r)) AS c FROM (
-    SELECT n.src AS v, p.c AS x,
-           ROW_NUMBER() OVER (PARTITION BY n.src ORDER BY p.c DESC) AS r
-    FROM kc_nbr n JOIN kc_c{t - 1} p ON p.v = n.dst)
-  GROUP BY v)"""
-    sql += f"""
-SELECT d.v AS entity, CAST(d.deg AS BIGINT) AS degree,
-       CAST(c.c AS BIGINT) AS coreness
-FROM kc_deg d JOIN kc_c{KCORE_ITERS} c ON c.v = d.v"""
-    return sql
-
-
-BFS_ITERS = 8  # dense synthetic entity graph reaches fixpoint in ~2-3 hops;
-# extra rounds are no-ops (empty frontier → empty new set → reached unchanged)
-BFS_SEEDS = 3
-
-
-def kg_bfs_distance_sql() -> str:
-    """Multi-source BFS hop-distance oracle over the KG entity graph: the
-    Spark side's fixed-round frontier loop unrolled as a CTE chain. Seeds =
-    the BFS_SEEDS highest-degree entities (ties broken by MIN entity id) —
-    a deterministic stand-in for the external seed list a production
-    reachability job would take. Integer/string arithmetic only — no float
-    parity concerns. Unreached nodes are absent from the output (same
-    edge-induced domain posture as kg_coreness)."""
-    # MATERIALIZED is load-bearing on the per-round reached set: each round
-    # references bfs_r{t-1} twice (the NOT EXISTS + the carry-forward UNION),
-    # so an un-hinted chain re-evaluates the entire KG build 2^t times (the
-    # measured LPA blow-up, kg_label_propagation_sql). The frontier is
-    # referenced once but derives from the twice-referenced new set.
-    sql = (
-        _kg_ctes()
-        + f""",
-{_und_cte("bfs")},
-bfs_nbr AS MATERIALIZED (SELECT a AS src, b AS dst FROM bfs_und
-            UNION ALL SELECT b AS src, a AS dst FROM bfs_und),
-bfs_deg AS MATERIALIZED (SELECT src AS v, COUNT(*) AS deg FROM bfs_nbr GROUP BY src),
-bfs_seeds AS MATERIALIZED (
-  SELECT v FROM bfs_deg ORDER BY deg DESC, v ASC LIMIT {BFS_SEEDS}),
-bfs_r0 AS MATERIALIZED (SELECT v, 0 AS hop FROM bfs_seeds),
-bfs_f0 AS MATERIALIZED (SELECT v FROM bfs_seeds)"""
-    )
-    for t in range(1, BFS_ITERS + 1):
-        sql += f""",
-bfs_n{t} AS MATERIALIZED (
-  SELECT c.v, {t} AS hop FROM (
-    SELECT DISTINCT n.src AS v
-    FROM bfs_nbr n JOIN bfs_f{t - 1} f ON f.v = n.dst) c
-  WHERE NOT EXISTS (SELECT 1 FROM bfs_r{t - 1} r WHERE r.v = c.v)),
-bfs_r{t} AS MATERIALIZED (
-  SELECT v, hop FROM bfs_r{t - 1} UNION ALL SELECT v, hop FROM bfs_n{t}),
-bfs_f{t} AS (SELECT v FROM bfs_n{t})"""
-    sql += f"""
-SELECT v AS entity, CAST(hop AS BIGINT) AS hop FROM bfs_r{BFS_ITERS}"""
-    return sql
-
-
-def kg_modularity_sql() -> str:
-    """Per-community Newman modularity oracle: the LPA oracle reused
-    VERBATIM as a wrapped CTE (single source — the community assignment
-    cannot drift from kg_label_propagation's), the undirected edge set
-    re-derived through a second wrapped _kg_ctes chain (MATERIALIZED
-    internally, so the double expansion costs two linear passes, not an
-    exponential blow-up), then q_c = in_c/m − (deg_c/(2m))² as the same
-    fixed 4-op IEEE tree the Spark side evaluates over exactly-computed
-    integers."""
-    und = (
-        _kg_ctes()
-        + """
-SELECT DISTINCT LEAST(subj, obj) AS a, GREATEST(subj, obj) AS b
-FROM triples WHERE subj <> obj"""
-    )
-    return f"""
-WITH md_lpa AS MATERIALIZED (
-  SELECT entity, community FROM ({kg_label_propagation_sql()})),
-md_base AS MATERIALIZED ({und}),
-md_m AS (SELECT COUNT(*) AS m FROM md_base),
-md_nbr AS (SELECT a AS v FROM md_base UNION ALL SELECT b AS v FROM md_base),
-md_deg AS (SELECT v, COUNT(*) AS deg FROM md_nbr GROUP BY v),
-md_in AS (
-  SELECT ca.community AS community, COUNT(*) AS in_edges
-  FROM md_base e
-  JOIN md_lpa ca ON ca.entity = e.a
-  JOIN md_lpa cb ON cb.entity = e.b
-  WHERE ca.community = cb.community
-  GROUP BY 1),
-md_grp AS (
-  SELECT l.community, COUNT(*) AS n_members,
-         SUM(COALESCE(d.deg, 0)) AS deg_sum
-  FROM md_lpa l LEFT JOIN md_deg d ON d.v = l.entity
-  GROUP BY 1)
-SELECT g.community,
-       CAST(g.n_members AS BIGINT) AS n_members,
-       CAST(COALESCE(i.in_edges, 0) AS BIGINT) AS in_edges,
-       CAST(g.deg_sum AS BIGINT) AS deg_sum,
-       (COALESCE(i.in_edges, 0) / m.m)
-         - ((g.deg_sum / (2 * m.m)) * (g.deg_sum / (2 * m.m)))
-         AS q_contrib
-FROM md_grp g
-LEFT JOIN md_in i ON i.community = g.community
-CROSS JOIN md_m m"""
-
-
-WSP_ITERS = 8  # Bellman-Ford relaxation rounds; the dense synthetic entity
-# graph converges in ~2-3 (extra rounds are no-op relaxations), same
-# fixed-round posture as BFS_ITERS
-WSP_SEEDS = 3
-
-
-def _wsp_cost_sql(cnt: str) -> str:
-    """Integer inverse-support edge cost: strongly-supported edges are
-    cheap (cost 1 at >=3 supporting facts), weak ones expensive — the SQL
-    twin of registry._wsp_cost. Pure integer CASE, no float."""
-    return (
-        f"CASE WHEN {cnt} >= 3 THEN 1 WHEN {cnt} = 2 THEN 2 ELSE 3 END"
-    )
-
-
-def kg_weighted_paths_sql() -> str:
-    """Weighted shortest-path oracle over the KG entity graph: the Spark
-    side's fixed-round Bellman-Ford relaxation unrolled as a CTE chain.
-    Edge costs are integer inverse-support (see _wsp_cost_sql) over the
-    UNDEDUPED fact multiplicity — computed BEFORE the distinct step the
-    other graph oracles apply, because multiplicity IS the weight signal.
-    Seeds = the WSP_SEEDS highest-degree entities (ties: min entity id),
-    the kg_bfs_distance posture. Integer-only — no float parity concerns.
-    Unreached nodes are absent (edge-induced domain)."""
-    sql = (
-        _kg_ctes()
-        + f""",
-wsp_cnt AS MATERIALIZED (
-  SELECT LEAST(subj, obj) AS a, GREATEST(subj, obj) AS b,
-         COUNT(*) AS cnt
-  FROM triples WHERE subj <> obj GROUP BY 1, 2),
-wsp_edges AS MATERIALIZED (
-  SELECT a AS src, b AS dst, {_wsp_cost_sql('cnt')} AS w FROM wsp_cnt
-  UNION ALL
-  SELECT b AS src, a AS dst, {_wsp_cost_sql('cnt')} AS w FROM wsp_cnt),
-wsp_deg AS MATERIALIZED (
-  SELECT src AS v, COUNT(*) AS deg FROM wsp_edges GROUP BY src),
-wsp_seeds AS MATERIALIZED (
-  SELECT v FROM wsp_deg ORDER BY deg DESC, v ASC LIMIT {WSP_SEEDS}),
-wsp_d0 AS MATERIALIZED (SELECT v, 0 AS dist FROM wsp_seeds)"""
-    )
-    for t in range(1, WSP_ITERS + 1):
-        sql += f""",
-wsp_c{t} AS (
-  SELECT e.dst AS v, d.dist + e.w AS dist
-  FROM wsp_d{t - 1} d JOIN wsp_edges e ON e.src = d.v
-  UNION ALL
-  SELECT v, dist FROM wsp_d{t - 1}),
-wsp_d{t} AS MATERIALIZED (
-  SELECT v, MIN(dist) AS dist FROM wsp_c{t} GROUP BY v)"""
-    sql += f"""
-SELECT v AS entity, CAST(dist AS BIGINT) AS dist FROM wsp_d{WSP_ITERS}"""
-    return sql
-
-
-RW_STEPS = 4  # walk length (steps beyond the start node)
-RW_WALKS = 2  # walks started per node
-
-
-def kg_random_walks_sql() -> str:
-    """Deterministic random-walk corpus oracle over the KG entity graph
-    (the DeepWalk/node2vec sampling step): the Spark side's fixed-step
-    transition loop unrolled as a CTE chain. The "random" next hop from the
-    walk's current node is the neighbor minimizing (portable_hash('rw|' ||
-    start || '|' || walk || '|' || step || '|' || neighbor), neighbor) —
-    pairwise-independent per (walk, step) like a seeded RNG draw, but a
-    pure expression both engines evaluate bit-identically (the JL-matrix
-    idiom, plans/lmops.py). Integer/string only — no float parity
-    concerns. Edge-induced node domain (kg_coreness posture); the dense
-    synthetic graph has no dead ends, and a dead-end walk would simply end
-    early on BOTH sides (inner join against the neighbor relation)."""
-    from .textops import PORTABLE_HASH_SQL  # single source of the hash twin
-
-    sql = (
-        _kg_ctes()
-        + f""",
-{_und_cte("rw")},
-rw_nbr AS MATERIALIZED (SELECT a AS src, b AS dst FROM rw_und
-            UNION ALL SELECT b AS src, a AS dst FROM rw_und),
-rw_s0 AS MATERIALIZED (
-  SELECT n.u AS start, ww.w, n.u AS cur
-  FROM (SELECT DISTINCT src AS u FROM rw_nbr) n,
-       UNNEST(generate_series(0, {RW_WALKS - 1})) AS ww(w))"""
-    )
-    for t in range(1, RW_STEPS + 1):
-        h = PORTABLE_HASH_SQL.format(
-            x=f"CONCAT('rw|', s.start, '|', s.w, '|', {t}, '|', n.dst)"
-        )
-        sql += f""",
-rw_c{t} AS (
-  SELECT s.start, s.w, n.dst, {h} AS h
-  FROM rw_s{t - 1} s JOIN rw_nbr n ON n.src = s.cur),
-rw_s{t} AS MATERIALIZED (
-  SELECT start, w, dst AS cur FROM rw_c{t}
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY start, w ORDER BY h, dst) = 1)"""
-    sql += "\n" + "\nUNION ALL\n".join(
-        f"""SELECT start AS start_entity, CAST(w AS INT) AS walk_id,
-       CAST({t} AS INT) AS step, cur AS node FROM rw_s{t}"""
-        for t in range(0, RW_STEPS + 1)
-    )
-    return sql
-
-
-def kg_connected_components_sql() -> str:
-    """Connected-components oracle over the KG entity graph: exact
-    min-reachable-label fixpoint via a recursive CTE (the DEDUP_CLUSTERS_SQL
-    pattern, textops.py), so — unlike the fixed-round unrolled oracles — it
-    has NO round-count coupling to the Spark side: the alternating-star
-    iteration (run to its own set-equality fixpoint) and the recursive label
-    propagation agree by construction at ANY component diameter. Working ids
-    are the numeric QIDs (regexp_extract '(\\d+)'), the exact rule entity
-    canonicalization applies (canonicalize._qnum), so the representative is
-    the component's min-numeric-QID member. The `r.lbl < e.dst` prune is
-    sound for the final MIN (a dropped label l >= dst is dominated by dst's
-    own smaller seed label); UNION (not ALL) bounds the recursion to the
-    finite (node, label) pair set. Edge-induced node domain (self-loops
-    dropped with the undirected derivation — kg_coreness posture)."""
-    base = _kg_ctes()
-    assert base.startswith("\nWITH ")
-    sql = base.replace("\nWITH ", "\nWITH RECURSIVE ", 1)
-    return (
-        sql
-        + f",\n{_und_cte('cc')}"
-        + r""",
-cc_edges AS MATERIALIZED (
-  SELECT CAST(regexp_extract(a, '(\d+)', 1) AS BIGINT) AS src,
-         CAST(regexp_extract(b, '(\d+)', 1) AS BIGINT) AS dst FROM cc_und
-  UNION ALL
-  SELECT CAST(regexp_extract(b, '(\d+)', 1) AS BIGINT) AS src,
-         CAST(regexp_extract(a, '(\d+)', 1) AS BIGINT) AS dst FROM cc_und),
-cc_nodes AS MATERIALIZED (SELECT DISTINCT src AS u FROM cc_edges),
-cc_reach(u, lbl) AS (
-  SELECT u, u FROM cc_nodes
-  UNION
-  SELECT e.dst, r.lbl FROM cc_reach r JOIN cc_edges e ON e.src = r.u
-  WHERE r.lbl < e.dst),
-cc_comp AS (SELECT u, MIN(lbl) AS root FROM cc_reach GROUP BY u)
-SELECT 'Q' || CAST(u AS VARCHAR) AS entity,
-       'Q' || CAST(root AS VARCHAR) AS component_rep,
-       CAST(COUNT(*) OVER (PARTITION BY root) AS BIGINT) AS component_size,
-       u = root AS is_rep
-FROM cc_comp"""
     )
 
 
@@ -1191,133 +859,6 @@ SELECT conv_id, CAST(turn_idx AS BIGINT) AS turn_idx, role,
        CAST(n_tokens AS BIGINT) AS n_tokens,
        CAST(suffix_tokens AS BIGINT) AS suffix_tokens
 FROM ctx_suf WHERE suffix_tokens <= {CONTEXT_BUDGET}"""
-    )
-
-
-# Wedge centers above this degree are excluded from common-neighbor
-# enumeration (a degree-d center emits d² wedge pairs — the classic hub
-# blow-up; the cap makes the capped CN a documented LOWER BOUND through
-# hot entities). 64 does not bind on the synthetic graph (max degree ~40);
-# cap behavior is pinned on crafted graphs in tests/test_linkpred.py.
-LINKPRED_HUB_CAP = 64
-LINKPRED_MIN_CN = 2
-
-
-def kg_link_prediction_sql() -> str:
-    """Link-prediction oracle over the KG entity graph: common-neighbor
-    counts via wedge enumeration at hub-capped centers, restricted to
-    NON-adjacent pairs, with neighbor-set Jaccard = cn/(deg_a+deg_b-cn).
-    Integer arithmetic except the single final IEEE division (correctly
-    rounded per IEEE 754 in both engines, unlike ln())."""
-    return (
-        _kg_ctes()
-        + f""",
-lp_und AS (
-  SELECT DISTINCT LEAST(subj, obj) AS a, GREATEST(subj, obj) AS b
-  FROM triples WHERE subj <> obj),
-lp_nbr AS (SELECT a AS src, b AS dst FROM lp_und
-           UNION ALL SELECT b AS src, a AS dst FROM lp_und),
-lp_deg AS (SELECT src AS v, COUNT(*) AS deg FROM lp_nbr GROUP BY src),
-lp_centers AS (
-  SELECT n.src, n.dst FROM lp_nbr n
-  JOIN lp_deg d ON d.v = n.src
-  WHERE d.deg <= {LINKPRED_HUB_CAP}),
-lp_cn AS (
-  SELECT o1.dst AS a, o2.dst AS b, COUNT(*) AS cn
-  FROM lp_centers o1
-  JOIN lp_centers o2 ON o2.src = o1.src AND o1.dst < o2.dst
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {LINKPRED_MIN_CN}),
-lp_new AS (
-  SELECT c.a, c.b, c.cn FROM lp_cn c
-  WHERE NOT EXISTS (SELECT 1 FROM lp_und e WHERE e.a = c.a AND e.b = c.b))
-SELECT p.a AS entity_a, p.b AS entity_b,
-       CAST(p.cn AS BIGINT) AS common_neighbors,
-       CAST(da.deg AS BIGINT) AS degree_a,
-       CAST(db.deg AS BIGINT) AS degree_b,
-       CAST(p.cn AS DOUBLE) / (da.deg + db.deg - p.cn) AS jaccard
-FROM lp_new p
-JOIN lp_deg da ON da.v = p.a
-JOIN lp_deg db ON db.v = p.b"""
-    )
-
-
-def kg_assortativity_sql() -> str:
-    """Degree-assortativity oracle over the KG entity graph: Pearson
-    correlation of endpoint degrees across the symmetrized edge list
-    (Newman 2002). Because each undirected edge contributes BOTH ordered
-    pairs, the x- and y-marginals coincide, so the textbook formula
-    collapses to r = (n·Σxy − (Σx)²) / (n·Σx² − (Σx)²) — sqrt() drops out
-    entirely (the jaccard-not-Adamic-Adar rule: no libm call to diverge
-    on). Sums are CAST to BIGINT before the product arithmetic so DuckDB's
-    HUGEINT aggregates take the same BIGINT ops Spark's longs do; the
-    single final division is one correctly-rounded IEEE op. A regular
-    graph (all degrees equal) makes the denominator 0 → NULL on both
-    engines."""
-    return (
-        _kg_ctes()
-        + """,
-as_und AS (
-  SELECT DISTINCT LEAST(subj, obj) AS a, GREATEST(subj, obj) AS b
-  FROM triples WHERE subj <> obj),
-as_nbr AS (SELECT a AS src, b AS dst FROM as_und
-           UNION ALL SELECT b AS src, a AS dst FROM as_und),
-as_deg AS (SELECT src AS v, COUNT(*) AS deg FROM as_nbr GROUP BY src),
-as_s AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(dx.deg) AS BIGINT) AS sx,
-         CAST(SUM(dx.deg * dy.deg) AS BIGINT) AS sxy,
-         CAST(SUM(dx.deg * dx.deg) AS BIGINT) AS sxx
-  FROM as_nbr p
-  JOIN as_deg dx ON dx.v = p.src
-  JOIN as_deg dy ON dy.v = p.dst)
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM as_und) AS n_edges,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM as_deg) AS n_nodes,
-       n AS n_pairs,
-       CASE WHEN n * sxx - sx * sx <> 0
-            THEN CAST(n * sxy - sx * sx AS DOUBLE)
-                 / CAST(n * sxx - sx * sx AS DOUBLE)
-       END AS assortativity
-FROM as_s"""
-    )
-
-
-CALIBRATION_BINS = 10
-
-
-def kg_calibration_sql() -> str:
-    """Verdict-calibration oracle: the NLI scorer's predicted support
-    probability (w_supports) binned into CALIBRATION_BINS fixed-width bins
-    over [0, 1] (explicit FLOOR formula — width_bucket's FP expression is
-    engine-specific), each bin reporting how often 'supports' verdicts
-    ACTUALLY won vs the mean predicted probability (the reliability-diagram
-    table).
-    mean_pred goes through DECIMAL(28,14) partial sums (order-independent,
-    the kg_pagerank discipline); support_rate and the gap are fixed IEEE
-    trees over exactly-computed inputs."""
-    cfg = DEFAULT_CONFIG
-    support = _q(list(cfg.classes)[0])
-    return (
-        _kg_ctes()
-        + f"""
-SELECT bin,
-       CAST(COUNT(*) AS BIGINT) AS n_claims,
-       CAST(COUNT(*) FILTER (WHERE verdict = {support}) AS BIGINT)
-         AS n_supported,
-       CAST(COUNT(*) FILTER (WHERE verdict = {support}) AS DOUBLE)
-         / COUNT(*) AS support_rate,
-       CAST(SUM(CAST(w_supports AS DECIMAL(28,14))) AS DOUBLE) / COUNT(*)
-         AS mean_pred,
-       ABS(CAST(COUNT(*) FILTER (WHERE verdict = {support}) AS DOUBLE)
-             / COUNT(*)
-           - CAST(SUM(CAST(w_supports AS DECIMAL(28,14))) AS DOUBLE)
-             / COUNT(*)) AS calibration_gap
-FROM (
-  SELECT verdict, w_supports,
-         CAST(LEAST(FLOOR(w_supports * {float(CALIBRATION_BINS)}) + 1,
-                    {CALIBRATION_BINS}) AS INT) AS bin
-  FROM triples)
-GROUP BY bin"""
     )
 
 

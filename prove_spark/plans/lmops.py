@@ -551,9 +551,10 @@ def _bpe_chain_sql() -> str:
     the Spark side): the vocab CTEs carry the word key so the encoder can
     use bp_v{BPE_ROUNDS} as a lookup; the merge-table selects never read
     it."""
-    # MATERIALIZED is load-bearing (the kg_hits lesson): each round's pair
-    # CTE is referenced three times (best, stats, merge) and each vocab CTE
-    # twice — plain CTEs would re-expand the chain exponentially.
+    # MATERIALIZED is load-bearing (as in kg_label_propagation_sql): each
+    # round's pair CTE is referenced three times (best, stats, merge) and
+    # each vocab CTE twice — plain CTEs would re-expand the chain
+    # exponentially.
     sql = """
 WITH bp_wc AS MATERIALIZED (
   SELECT w AS word, COUNT(*) AS n

@@ -168,358 +168,6 @@ def kg_pagerank(spark, sf_dir):
     )
 
 
-def kg_hits(spark, sf_dir):
-    """HITS hubs & authorities (Kleinberg 1999) over the constructed KG —
-    the graph family's eighth signal (role separation: entities that POINT
-    AT important things vs entities important things point at — a mutual
-    two-vector recursion PageRank's single vector cannot express; on a KG
-    the hub side surfaces aggregator entities, the authority side
-    canonical referents). HITS_ITERS synchronous rounds, each
-    hub_{t-1} → auth_t → hub_t, mirrored round-for-round by the DuckDB
-    oracle's unrolled CTE chain (kg_oracle.kg_hits_sql).
-
-    L1 normalization by the exact DECIMAL total replaces the textbook L2
-    norm deliberately: sqrt() is a libm call and not bit-identical across
-    engines, while sum-normalization is one correctly-rounded IEEE
-    division of two exactly-computed values (the kg_link_prediction
-    Jaccard-not-Adamic-Adar reason). Fixpoint direction is unaffected —
-    both normalizations are positive scalings of the same linear maps.
-
-    Scale shape: the edge relation is pre-partitioned and persisted ONCE
-    (eager — the measured sibling-stage cache race); each half-round is
-    one edge-scale join reusing that partitioning + one node-scale
-    map-side-combinable DECIMAL sum; the normalization total rides as a
-    1-row broadcast (never a driver collect). Per-node sums go through
-    DECIMAL(28,14), every round's scores are quantized to the 1e-12 grid
-    (the kg_pagerank discipline). Round state (auth and hub) is
-    lineage-truncated via plans/iterstate.py."""
-    from .kg_oracle import HITS_ITERS
-
-    triples = _kg_build(spark, sf_dir)
-    edges = (
-        triples.where(F.col("subj") != F.col("obj"))
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .distinct()
-        .repartition("src")
-        .persist()
-    )
-    nodes = _kg_node_set(triples).persist()
-    _KG_CACHES.extend([edges, nodes])
-    edges.count()
-    nodes.count()
-
-    def qz(col):
-        # HALF_UP quantization to the 1e-12 grid — same floor trick both engines
-        return F.floor(col * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
-
-    def normalize(raw, key, out):
-        # raw: (key, s DECIMAL(38,14)) — exact; total is an exact DECIMAL
-        # sum of those partials, so score = qz(s/total) is one cast pair +
-        # one correctly-rounded IEEE division + the grid floor, identical
-        # expression tree in the oracle
-        tot = raw.agg(F.sum("s").alias("tot"))  # 1 row
-        return (
-            nodes.crossJoin(F.broadcast(tot))
-            .join(raw, nodes.entity == raw[key], "left")
-            .select(
-                "entity",
-                qz(
-                    F.coalesce(F.col("s").cast("double"), F.lit(0.0))
-                    / F.col("tot").cast("double")
-                ).alias(out),
-            )
-        )
-
-    hub = nodes.select("entity", F.lit(1.0).alias("hub"))
-    auth = None
-    for _ in range(HITS_ITERS):
-        araw = (
-            edges.join(hub, edges.src == hub.entity)
-            .groupBy("dst")
-            .agg(F.sum(F.col("hub").cast("decimal(28,14)")).alias("s"))
-        )
-        auth = truncate_round(normalize(araw, "dst", "auth"))
-        hraw = (
-            edges.join(auth, edges.dst == auth.entity)
-            .groupBy("src")
-            .agg(F.sum(F.col("auth").cast("decimal(28,14)")).alias("s"))
-        )
-        hub = truncate_round(normalize(hraw, "src", "hub"))
-    indeg = edges.groupBy("dst").agg(F.count("*").alias("ideg"))
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("odeg"))
-    return (
-        auth.join(hub, "entity")
-        .join(indeg, auth.entity == indeg.dst, "left")
-        .join(outdeg, auth.entity == outdeg.src, "left")
-        .select(
-            "entity",
-            F.col("auth").alias("authority"),
-            F.col("hub").alias("hub_score"),
-            F.coalesce("ideg", F.lit(0)).cast("long").alias("in_degree"),
-            F.coalesce("odeg", F.lit(0)).cast("long").alias("out_degree"),
-        )
-    )
-
-
-def kg_random_walks(spark, sf_dir):
-    """Deterministic random-walk sampling over the KG entity graph — the
-    graph family's ninth signal (the DeepWalk/node2vec corpus-generation
-    step that turns a graph into training sequences for embedding models;
-    Perozzi et al., KDD'14): RW_WALKS walks of RW_STEPS steps from every
-    node, emitted long-form as (start_entity, walk_id, step, node).
-
-    "Random" is the repo's seeded-draw idiom (the JL sign-matrix rule,
-    plans/lmops.py): the next hop is the neighbor minimizing
-    (portable_hash('rw|' || start || walk || step || neighbor), neighbor) —
-    pairwise-independent across (walk, step) draws like an RNG, but a pure
-    expression, so any engine and any partition layout reproduces the walk
-    corpus bit-identically; the oracle (kg_oracle.kg_random_walks_sql)
-    unrolls the same transitions as a CTE chain.
-
-    Scale shape: the neighbor relation is pre-partitioned on src and
-    persisted ONCE (eager — every round's join probes it); each step is ONE
-    edge-scale equi-join (frontier.cur = nbr.src, reusing that
-    partitioning) followed by ONE map-side-combinable min(struct(h, dst))
-    aggregation per (start, walk) — no window over anything bigger than a
-    node's neighbor list, nothing all-pairs, and the frontier stays at
-    exactly nodes × RW_WALKS rows every round. Round state is
-    lineage-truncated (plans/iterstate.py). Integer/string only. Dead ends
-    would end a walk early on BOTH engines (inner join); the undirected
-    derivation guarantees min-degree ≥ 1 on the edge-induced domain."""
-    from .kg_oracle import RW_STEPS, RW_WALKS
-    from .textops import _portable_hash
-
-    triples = _kg_build(spark, sf_dir)
-    und = _kg_undirected_edges(triples)
-    nbr = (
-        und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .repartition("src")
-        .persist()
-    )
-    _KG_CACHES.append(nbr)
-    nbr.count()  # all RW_STEPS round-joins probe it (sibling-stage race)
-    state = (
-        nbr.select(F.col("src").alias("start"))
-        .distinct()
-        .select(
-            "start",
-            F.explode(F.sequence(F.lit(0), F.lit(RW_WALKS - 1))).alias("w"),
-        )
-        .select("start", F.col("w").cast("int").alias("w"))
-        .withColumn("cur", F.col("start"))
-    )
-    steps = [
-        state.select(
-            F.col("start").alias("start_entity"),
-            F.col("w").alias("walk_id"),
-            F.lit(0).cast("int").alias("step"),
-            F.col("cur").alias("node"),
-        )
-    ]
-    for t in range(1, RW_STEPS + 1):
-        h = _portable_hash(
-            F.concat(
-                F.lit("rw|"),
-                F.col("start"),
-                F.lit("|"),
-                F.col("w").cast("string"),
-                F.lit("|"),
-                F.lit(str(t)),
-                F.lit("|"),
-                F.col("dst"),
-            )
-        )
-        state = truncate_round(
-            state.join(nbr, state.cur == nbr.src)
-            .select("start", "w", "dst", h.alias("h"))
-            .groupBy("start", "w")
-            .agg(F.min(F.struct("h", "dst")).alias("m"))
-            .select("start", "w", F.col("m.dst").alias("cur")),
-        )
-        steps.append(
-            state.select(
-                F.col("start").alias("start_entity"),
-                F.col("w").alias("walk_id"),
-                F.lit(t).cast("int").alias("step"),
-                F.col("cur").alias("node"),
-            )
-        )
-    out = steps[0]
-    for s in steps[1:]:
-        out = out.union(s)
-    return out
-
-
-def kg_modularity(spark, sf_dir):
-    """Newman modularity contributions per LPA community — the clustering
-    QUALITY evaluation over the graph family's own community detector (the
-    eval-op pairing of [dedup_pr_eval]: detect, then price the detection):
-    per community c, q_c = in_c/m − (deg_c/(2m))², the standard modularity
-    summand over the undirected entity graph. Per-community rows (no
-    cross-community float reduction — the only arithmetic is a fixed
-    4-op IEEE tree of exactly-computed integers, bit-identical across
-    engines: two divisions, one multiply, one subtract).
-
-    Scale shape: communities come from the shared _label_propagation core
-    (round state lineage-truncated); the in-community edge count is the
-    edge relation joined to the community map on EACH endpoint (two
-    node-scale equi-joins, never all-pairs); degrees one combinable agg;
-    m rides as a 1-row broadcast. The community map is lineage-truncated
-    before its three consumers (both endpoint joins + the membership
-    rollup)."""
-    from .kg_oracle import LPA_ITERS
-
-    triples = _kg_build(spark, sf_dir)
-    und = _kg_undirected_edges(triples)
-    nodes = _kg_node_set(triples)
-    comm = truncate_round(
-        _label_propagation(nodes, und, LPA_ITERS).select(
-            "entity", "community"
-        ),
-    )
-    return _modularity_contributions(comm, und)
-
-
-def _modularity_contributions(comm, und):
-    """Modularity core over a community map (entity, community) and an
-    undirected (a < b) edge relation — factored out so tests can drive
-    crafted partitions directly (LPA collapses the dense synthetic graph
-    to ONE community, where q = 1 − 1 = 0 exactly — documented; the
-    crafted two-community graph in tests/test_modularity.py pins the
-    discrimination)."""
-    m_df = und.agg(F.count("*").alias("m"))  # 1 row
-    nbr = und.select(F.col("a").alias("v")).union(
-        und.select(F.col("b").alias("v"))
-    )
-    deg = nbr.groupBy("v").agg(F.count("*").alias("deg"))
-    ca = comm.select(F.col("entity").alias("a"), F.col("community").alias("ca"))
-    cb = comm.select(F.col("entity").alias("b"), F.col("community").alias("cb"))
-    inn = (
-        und.join(ca, "a")
-        .join(cb, "b")
-        .where(F.col("ca") == F.col("cb"))
-        .groupBy(F.col("ca").alias("community"))
-        .agg(F.count("*").alias("in_edges"))
-    )
-    grp = (
-        comm.join(deg, comm.entity == deg.v, "left")
-        .groupBy("community")
-        .agg(
-            F.count("*").alias("n_members"),
-            F.sum(F.coalesce("deg", F.lit(0))).alias("deg_sum"),
-        )
-    )
-    half = F.col("deg_sum") / (F.lit(2) * F.col("m"))
-    return (
-        grp.join(inn, "community", "left")
-        .crossJoin(F.broadcast(m_df))
-        .select(
-            "community",
-            F.col("n_members").cast("long").alias("n_members"),
-            F.coalesce("in_edges", F.lit(0)).cast("long").alias("in_edges"),
-            F.col("deg_sum").cast("long").alias("deg_sum"),
-            (
-                F.coalesce("in_edges", F.lit(0)) / F.col("m")
-                - half * half
-            ).alias("q_contrib"),
-        )
-    )
-
-
-def _wsp_cost(cnt):
-    """Integer inverse-support edge cost (SQL twin: kg_oracle._wsp_cost_sql):
-    strongly-supported edges cheap (cost 1 at >= 3 supporting facts), weak
-    ones expensive. Pure integer CASE — no float."""
-    return (
-        F.when(cnt >= 3, F.lit(1))
-        .when(cnt == 2, F.lit(2))
-        .otherwise(F.lit(3))
-    )
-
-
-def kg_weighted_paths(spark, sf_dir):
-    """Weighted shortest paths over the KG entity graph — the graph
-    family's tenth signal (weighted reachability: how CHEAPLY an entity is
-    reached through well-supported facts, where [kg_bfs_distance] counts
-    hops as if every edge were equal): multi-source Bellman-Ford from the
-    WSP_SEEDS highest-degree entities, with integer inverse-support edge
-    costs computed from the UNDEDUPED fact multiplicity (multiplicity IS
-    the weight signal, so the cost agg runs before the distinct step the
-    other graph derivations apply).
-
-    Scale shape: the weighted edge relation is pre-partitioned on src and
-    persisted ONCE (eager — every relaxation round probes it); each round
-    is ONE edge-scale equi-join reusing that partitioning + ONE node-scale
-    map-side-combinable min-aggregation (the Pregel relax step as plain
-    DataFrame ops); the frontier never exceeds the node set. Fixed
-    WSP_ITERS rounds mirrored exactly by the oracle's unrolled CTE chain
-    (kg_oracle.kg_weighted_paths_sql) — the dense synthetic graph reaches
-    its fixpoint in ~2-3 rounds and the rest are no-op relaxations, the
-    kg_bfs_distance posture. Round state is lineage-truncated
-    (plans/iterstate.py). Integer-only."""
-    from .kg_oracle import WSP_ITERS, WSP_SEEDS
-
-    triples = _kg_build(spark, sf_dir)
-    cnt = (
-        triples.where(F.col("subj") != F.col("obj"))
-        .groupBy(
-            F.least("subj", "obj").alias("a"),
-            F.greatest("subj", "obj").alias("b"),
-        )
-        .agg(F.count("*").alias("cnt"))
-    )
-    edges = (
-        cnt.select(
-            F.col("a").alias("src"),
-            F.col("b").alias("dst"),
-            _wsp_cost(F.col("cnt")).alias("w"),
-        )
-        .union(
-            cnt.select(
-                F.col("b").alias("src"),
-                F.col("a").alias("dst"),
-                _wsp_cost(F.col("cnt")).alias("w"),
-            )
-        )
-        .repartition("src")
-        .persist()
-    )
-    _KG_CACHES.append(edges)
-    edges.count()  # every relaxation round probes it (sibling-stage race)
-    return _wsp_distance(edges, WSP_ITERS, WSP_SEEDS, _KG_CACHES)
-
-
-def _wsp_distance(edges, iters: int, n_seeds: int, caches: list):
-    """Bellman-Ford relaxation core over a weighted directed edge relation
-    (src, dst, w): multi-source distances from the n_seeds highest-degree
-    vertices (ties: min id). Factored out so tests can drive crafted
-    weighted graphs directly (the synthetic entity graph is dense enough
-    that cheap-multi-hop-beats-expensive-direct never arises there)."""
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    seeds = (
-        deg.orderBy(F.desc("deg"), F.asc("src"))
-        .limit(n_seeds)
-        .select(F.col("src").alias("v"))
-    )
-    dist = truncate_round(
-        seeds.select("v", F.lit(0).cast("long").alias("dist"))
-    )
-    for _ in range(iters):
-        relaxed = dist.join(edges, dist.v == edges.src).select(
-            edges.dst.alias("v"),
-            (dist.dist + edges.w).cast("long").alias("dist"),
-        )
-        dist = truncate_round(
-            relaxed.union(dist.select("v", "dist"))
-            .groupBy("v")
-            .agg(F.min("dist").alias("dist")),
-        )
-    return dist.select(
-        F.col("v").alias("entity"), F.col("dist").cast("long").alias("dist")
-    )
-
-
 def kg_entities(spark, sf_dir):
     """The entities dimension table (canonical id, label, members, stats)."""
     from ..pipeline.run import build_entities
@@ -529,8 +177,8 @@ def kg_entities(spark, sf_dir):
 
 def kg_triangles(spark, sf_dir):
     """Per-entity triangle participation over the KG entity graph — the
-    graph family's clustering signal next to [[kg_pagerank]] (importance)
-    and connected components (identity). Exact, integer-only.
+    graph family's clustering signal next to [[kg_pagerank]] (importance).
+    Exact, integer-only.
 
     Scale shape: edges are oriented from the (degree, id)-smaller endpoint —
     the classic triangle-enumeration trick: every triangle appears exactly
@@ -595,76 +243,6 @@ def kg_triangles(spark, sf_dir):
     )
 
 
-def _coreness(und, iters: int, cache_registry: list | None = None):
-    """Core h-index coreness loop over an undirected (a < b) edge relation
-    (Lü et al. 2016): c(v) starts at degree; each round c(v) becomes the
-    H-index of its neighbors' current values; the unique fixpoint is the
-    exact k-core number of every node. Synchronous and deterministic, so
-    the DuckDB oracle can unroll it round-for-round. Factored out so tests
-    can drive crafted graphs directly.
-
-    Scale shape: the symmetric neighbor relation is pre-partitioned on dst
-    and persisted ONCE (eager — the sibling-stage cache race); each round
-    is one edge-scale join reusing that partitioning, one neighbor-scale
-    window PARTITIONED BY node (per-node sort is degree-bounded, never
-    global), and one map-side-combinable max-agg — the same per-round cost
-    profile as [kg_pagerank]/[kg_label_propagation]. Round state is
-    lineage-truncated (plans/iterstate.py). H-index via the sorted-rank
-    trick: with neighbor values x ranked descending by r, H = max(min(x, r)).
-    Integer-only. Defined on the edge-induced node set (the undirected
-    derivation drops self-loops, so isolated nodes don't appear)."""
-    caches = _KG_CACHES if cache_registry is None else cache_registry
-    nbr = (
-        und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .repartition("dst")
-        .persist()
-    )
-    caches.append(nbr)
-    nbr.count()
-    deg = truncate_round(
-        nbr.groupBy("src").agg(F.count("*").alias("deg")).select(
-            F.col("src").alias("v"), "deg"
-        ),
-    )
-    deg.count()  # deg feeds round 0 AND the final join — sibling consumers
-    c = deg.select("v", F.col("deg").alias("c"))
-    w = Window.partitionBy("v").orderBy(F.desc("x"))
-    for _ in range(iters):
-        vals = nbr.join(c, nbr.dst == c.v).select(
-            F.col("src").alias("v"), F.col("c").alias("x")
-        )
-        c = (
-            vals.withColumn("r", F.row_number().over(w))
-            .groupBy("v")
-            .agg(F.max(F.least(F.col("x"), F.col("r"))).alias("c"))
-        )
-        c = truncate_round(c)
-    return deg.join(c, "v").select(
-        F.col("v").alias("entity"),
-        F.col("deg").cast("long").alias("degree"),
-        F.col("c").cast("long").alias("coreness"),
-    )
-
-
-def kg_coreness(spark, sf_dir):
-    """Per-entity k-core number over the KG entity graph — the graph
-    family's density/robustness signal next to [kg_pagerank] (importance),
-    [kg_triangles] (clustering), [kg_label_propagation] (community), and
-    connected components (identity). The synthetic entity graph is regular
-    enough that every node lands in the same core (coreness 6 — the 11
-    intermediate rounds still walk every initial degree 6..39 down through
-    the h-operator, which the unrolled oracle checks round-for-round);
-    discriminative behavior is pinned on crafted graphs in
-    tests/test_kcore.py, same posture as alias_mentions_anchored."""
-    from .kg_oracle import KCORE_ITERS
-
-    triples = _kg_build(spark, sf_dir)
-    und = truncate_round(_kg_undirected_edges(triples))
-    und.count()  # both union legs of nbr consume it concurrently
-    return _coreness(und, KCORE_ITERS)
-
-
 def _label_propagation(nodes, und, iters: int, cache_registry: list | None = None):
     """Core synchronous LPA loop over an undirected (a < b) edge relation:
     every round, each node adopts its neighbors' most frequent label, ties
@@ -725,330 +303,15 @@ def _label_propagation(nodes, und, iters: int, cache_registry: list | None = Non
 
 def kg_label_propagation(spark, sf_dir):
     """Community detection over the KG entity graph — the graph family's
-    fourth signal next to [kg_pagerank] (importance), [kg_triangles]
-    (clustering), and connected components (identity): synchronous,
-    deterministic label propagation for LPA_ITERS rounds, mirrored
-    round-for-round by the DuckDB oracle's unrolled CTE chain
-    (kg_oracle.kg_label_propagation_sql)."""
+    third signal next to [kg_pagerank] (importance) and [kg_triangles]
+    (clustering): synchronous, deterministic label propagation for
+    LPA_ITERS rounds, mirrored round-for-round by the DuckDB oracle's
+    unrolled CTE chain (kg_oracle.kg_label_propagation_sql)."""
     from .kg_oracle import LPA_ITERS
 
     triples = _kg_build(spark, sf_dir)
     return _label_propagation(
         _kg_node_set(triples), _kg_undirected_edges(triples), LPA_ITERS
-    )
-
-
-def _bfs_distance(und, iters: int, n_seeds: int, cache_registry: list | None = None):
-    """Core multi-source BFS hop-distance loop over an undirected (a < b)
-    edge relation: seeds (the n_seeds highest-degree nodes, ties broken by
-    MIN id — a deterministic stand-in for the external seed list a
-    production reachability job would take) start at hop 0; each round the
-    frontier's unseen neighbors are labeled with the round number. Exact,
-    integer/string only, synchronous — the DuckDB oracle unrolls it
-    round-for-round. Factored out so tests can drive crafted graphs.
-
-    Scale shape: the symmetric neighbor relation is pre-partitioned on dst
-    and persisted ONCE (eager — the sibling-stage cache race); each round
-    costs one FRONTIER-scale join reusing that partitioning + a
-    frontier-neighborhood distinct + an anti join against the reached set —
-    the textbook frontier BFS, never a dense all-nodes relaxation (a
-    Bellman-Ford-style full-relation min would re-scan every reached node
-    every round). Seed selection is a TakeOrderedAndProject (K-row limit,
-    no global window). Round state (reached set AND new frontier — the new
-    set feeds two sibling consumers) is lineage-truncated + materialized
-    via plans/iterstate.py. Extra rounds past the eccentricity are no-ops
-    (empty frontier → empty new set). Unreached nodes are absent from the
-    output (edge-induced domain, same posture as _coreness)."""
-    caches = _KG_CACHES if cache_registry is None else cache_registry
-    nbr = (
-        und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .repartition("dst")
-        .persist()
-    )
-    caches.append(nbr)
-    nbr.count()
-    deg = nbr.groupBy("src").agg(F.count("*").alias("deg")).select(
-        F.col("src").alias("v"), "deg"
-    )
-    seeds = truncate_round(
-        deg.orderBy(F.desc("deg"), F.asc("v")).limit(n_seeds).select("v"),
-    )
-    reached = seeds.select("v", F.lit(0).cast("int").alias("hop"))
-    frontier = seeds
-    for t in range(1, iters + 1):
-        cand = (
-            nbr.join(frontier, nbr.dst == frontier.v)
-            .select(F.col("src").alias("v"))
-            .distinct()
-        )
-        new = truncate_round(
-            cand.join(reached, "v", "left_anti").select(
-                "v", F.lit(t).cast("int").alias("hop")
-            ),
-        )
-        reached = truncate_round(reached.unionByName(new))
-        frontier = new.select("v")
-    return reached.select(
-        F.col("v").alias("entity"), F.col("hop").cast("long").alias("hop")
-    )
-
-
-def kg_bfs_distance(spark, sf_dir):
-    """Multi-source BFS hop distance over the KG entity graph — the graph
-    family's sixth signal (reachability/distance) next to [kg_pagerank]
-    (importance), [kg_triangles] (clustering), connected components
-    (identity), [kg_label_propagation] (community), and [kg_coreness]
-    (density). The dense synthetic graph collapses to hops {0, 1} from the
-    top-degree seeds (the unrolled oracle still checks all BFS_ITERS
-    rounds' no-op fixpoint); discriminative multi-hop behavior is pinned on
-    crafted graphs in tests/test_bfs.py, same posture as kg_coreness."""
-    from .kg_oracle import BFS_ITERS, BFS_SEEDS
-
-    triples = _kg_build(spark, sf_dir)
-    und = truncate_round(_kg_undirected_edges(triples))
-    return _bfs_distance(und, BFS_ITERS, BFS_SEEDS)
-
-
-def kg_connected_components(spark, sf_dir):
-    """Connected components over the KG entity graph — the graph family's
-    IDENTITY signal, the one the sibling docstrings name next to
-    [kg_pagerank] (importance), [kg_triangles] (clustering),
-    [kg_label_propagation] (community), [kg_coreness] (density),
-    [kg_bfs_distance] (reachability), and [kg_link_prediction] (completion).
-    It exposes the pipeline's canonicalization core itself
-    (canonicalize.connected_components_long — alternating large-star/
-    small-star, Kiveris et al. 2014, O(log d) rounds, run to a set-equality
-    fixpoint with per-round lineage cuts) on the data-derived entity graph,
-    under the same min-numeric-QID representative rule entity
-    canonicalization applies (working ids via canonicalize._qnum's
-    '(\\d+)' extraction). Output mirrors [dedup_lsh_clusters]'s cluster
-    shape: (entity, component_rep, component_size, is_rep) over the
-    edge-induced node domain (kg_coreness posture).
-
-    Scale shape: every star round is one self-join + one min-aggregation on
-    the ENTITY-graph edge set, never the fact table; the size rollup is
-    component-count-sized and broadcast back. The oracle is the recursive
-    min-label-propagation CTE (kg_oracle.kg_connected_components_sql) — no
-    round-count coupling on the ORACLE side, and require_converged=True on
-    the Spark side turns an exhausted iteration budget into a ValueError
-    instead of a silently fragmented star forest, so the engines either
-    agree or fail loudly at any component diameter. Reference parity: ProVe
-    canonicalizes entities to a single representative id before
-    materializing triples (north-star 'connected-components
-    canonicalization'); crafted-graph behavior of the CC core is pinned in
-    tests/test_canonicalize.py."""
-    from ..pipeline.canonicalize import _qnum, connected_components_long
-
-    triples = _kg_build(spark, sf_dir)
-    und = truncate_round(_kg_undirected_edges(triples))
-    comp = connected_components_long(
-        und.select(_qnum("a").alias("u"), _qnum("b").alias("v")),
-        require_converged=True,
-    )
-    sizes = comp.groupBy("root").agg(F.count("*").alias("component_size"))
-    return comp.join(F.broadcast(sizes), "root").select(
-        F.concat(F.lit("Q"), F.col("u").cast("string")).alias("entity"),
-        F.concat(F.lit("Q"), F.col("root").cast("string")).alias(
-            "component_rep"
-        ),
-        F.col("component_size").cast("long").alias("component_size"),
-        (F.col("u") == F.col("root")).alias("is_rep"),
-    )
-
-
-def _link_prediction(und, hub_cap: int, min_cn: int, cache_registry: list | None = None):
-    """Core common-neighbor link prediction over an undirected (a < b) edge
-    relation: for every NON-adjacent pair with >= min_cn common neighbors
-    (counted through wedge centers of degree <= hub_cap), emit the count and
-    the neighbor-set Jaccard cn/(deg_a + deg_b - cn). Factored out so tests
-    can drive crafted graphs directly.
-
-    Scale shape: wedge enumeration is ONE self-join of the hub-capped
-    neighbor relation on its center key — fan-out per center is capped-deg²,
-    so a degree-d hub's d² pair blow-up never materializes (capped CN is a
-    documented lower bound through hot entities; degrees stay TRUE degrees).
-    The pair count is a combinable agg on (a, b); adjacency removal is one
-    LEFT ANTI join against the edge set (edge-scale build side); the two
-    degree joins are node-scale. Exactness: integers throughout except the
-    single final IEEE division, which is correctly rounded per IEEE 754 in
-    both engines (the reason the score is Jaccard and not Adamic-Adar:
-    1/ln(deg) sums are NOT bit-portable across libms)."""
-    caches = _KG_CACHES if cache_registry is None else cache_registry
-    und = und.persist()
-    caches.append(und)
-    und.count()  # nbr's two union legs + the anti join consume it concurrently
-    nbr = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    deg = truncate_round(
-        nbr.groupBy("src").agg(F.count("*").alias("deg")).select(
-            F.col("src").alias("v"), "deg"
-        ),
-    )
-    deg.count()  # feeds the center filter AND both final degree joins
-    centers = nbr.join(
-        deg.select(F.col("v").alias("src"), "deg"), "src"
-    ).where(F.col("deg") <= hub_cap)
-    o1 = centers.select("src", F.col("dst").alias("a"))
-    o2 = centers.select("src", F.col("dst").alias("b"))
-    cn = (
-        o1.join(o2, "src")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("cn"))
-        .where(F.col("cn") >= min_cn)
-    )
-    new = cn.join(und, ["a", "b"], "left_anti")
-    da = deg.select(F.col("v").alias("a"), F.col("deg").alias("da"))
-    db = deg.select(F.col("v").alias("b"), F.col("deg").alias("db"))
-    return (
-        new.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.col("a").alias("entity_a"),
-            F.col("b").alias("entity_b"),
-            F.col("cn").cast("long").alias("common_neighbors"),
-            F.col("da").cast("long").alias("degree_a"),
-            F.col("db").cast("long").alias("degree_b"),
-            (
-                F.col("cn").cast("double")
-                / (F.col("da") + F.col("db") - F.col("cn"))
-            ).alias("jaccard"),
-        )
-    )
-
-
-def kg_link_prediction(spark, sf_dir):
-    """Common-neighbor link prediction over the KG entity graph — the graph
-    family's seventh signal (missing-edge inference) next to [kg_pagerank]
-    (importance), [kg_triangles] (clustering), connected components
-    (identity), [kg_label_propagation] (community), [kg_coreness] (density),
-    and [kg_bfs_distance] (reachability): which entity pairs are NOT yet
-    linked by a verified triple but share many verified neighbors — the
-    candidate-generation step for KG completion. Hub-cap behavior is pinned
-    on crafted graphs in tests/test_linkpred.py (the cap does not bind on
-    the synthetic graph — documented), same posture as kg_coreness."""
-    from .kg_oracle import LINKPRED_HUB_CAP, LINKPRED_MIN_CN
-
-    triples = _kg_build(spark, sf_dir)
-    und = truncate_round(_kg_undirected_edges(triples))
-    return _link_prediction(und, LINKPRED_HUB_CAP, LINKPRED_MIN_CN)
-
-
-def kg_assortativity(spark, sf_dir):
-    """Degree assortativity of the KG entity graph (Newman 2002) — the
-    graph family's MIXING-PATTERN signal: do well-connected entities link
-    to other hubs (assortative, r > 0) or to leaves (disassortative,
-    r < 0)? Real KGs are strongly disassortative (hub entities link to
-    long-tail ones) and the coefficient is the one-number summary a graph
-    pipeline tracks across builds. Pearson correlation of endpoint degrees
-    over the symmetrized edge list; because both orders of every edge are
-    included, the x/y marginals coincide and r collapses to
-    (n·Σxy − (Σx)²)/(n·Σx² − (Σx)²) — the sqrt() in Pearson's denominator
-    drops out entirely (no libm call to diverge cross-engine, the
-    kg_link_prediction Jaccard-not-Adamic-Adar rule).
-
-    Scale shape: degrees are one combinable count; the sufficient
-    statistics are ONE pass over the edge relation with two node-scale
-    degree joins (the [user_value_trend] sufficient-statistics discipline
-    — nothing iterates, nothing is all-pairs); the output is a single row.
-    BIGINT throughout (degree sums fit comfortably at any graph where the
-    edge list itself is storable — Σx ≤ 2m·d_max; promote to DECIMAL(38,0)
-    partials if d_max·m approaches 2^63) with one final IEEE division;
-    a perfectly regular graph zeroes the denominator → NULL, both engines."""
-    triples = _kg_build(spark, sf_dir)
-    und = truncate_round(_kg_undirected_edges(triples))
-    und.count()  # nbr's union legs + the edge-count agg consume it concurrently
-    nbr = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    deg = truncate_round(
-        nbr.groupBy("src").agg(F.count("*").alias("deg")).select(
-            F.col("src").alias("v"), "deg"
-        ),
-    )
-    deg.count()  # feeds both endpoint joins + the node-count agg
-    dx = deg.select(F.col("v").alias("src"), F.col("deg").alias("x"))
-    dy = deg.select(F.col("v").alias("dst"), F.col("deg").alias("y"))
-    s = (
-        nbr.join(dx, "src")
-        .join(dy, "dst")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("x").cast("long").alias("sx"),
-            F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-            F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        )
-    )
-    m_df = und.agg(F.count("*").cast("long").alias("n_edges"))
-    nn_df = deg.agg(F.count("*").cast("long").alias("n_nodes"))
-    den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    return (
-        s.crossJoin(F.broadcast(m_df))
-        .crossJoin(F.broadcast(nn_df))
-        .select(
-            "n_edges",
-            "n_nodes",
-            F.col("n").alias("n_pairs"),
-            F.when(
-                den != 0,
-                (
-                    F.col("n") * F.col("sxy") - F.col("sx") * F.col("sx")
-                ).cast("double")
-                / den.cast("double"),
-            ).alias("assortativity"),
-        )
-    )
-
-
-def kg_calibration(spark, sf_dir):
-    """Reliability-diagram calibration table for the NLI verdict scorer —
-    the model-monitoring op a verify-and-materialize pipeline runs on every
-    build (is a claim scored 0.8 'supports' actually supported ~80% of the
-    time?): predicted support probability (w_supports) binned into
-    CALIBRATION_BINS fixed-width bins over [0, 1], per bin the claim count,
-    the empirical supports rate, the mean predicted probability, and the
-    |gap| between them (the per-bin ECE term, unweighted).
-
-    Scale shape: a pure map-side bin projection riding the triples relation
-    followed by ONE combinable groupBy on the bin key (≤ CALIBRATION_BINS
-    groups). Cross-engine exactness: the bin edge is an explicit FLOOR
-    formula, NOT width_bucket (engine-specific FP); mean_pred sums the
-    double probabilities through DECIMAL(28,14) partials (order-independent
-    — the kg_pagerank discipline); support_rate/gap are fixed IEEE trees
-    over exactly-computed inputs."""
-    from ..config import DEFAULT_CONFIG
-    from .kg_oracle import CALIBRATION_BINS
-
-    support = list(DEFAULT_CONFIG.classes)[0]
-    t = _kg_build(spark, sf_dir)
-    binned = t.select(
-        "verdict",
-        "w_supports",
-        F.least(
-            F.floor(F.col("w_supports") * float(CALIBRATION_BINS)) + 1,
-            F.lit(CALIBRATION_BINS),
-        )
-        .cast("int")
-        .alias("bin"),
-    )
-    g = binned.groupBy("bin").agg(
-        F.count("*").cast("long").alias("n_claims"),
-        F.count(F.when(F.col("verdict") == support, True))
-        .cast("long")
-        .alias("n_supported"),
-        F.sum(F.col("w_supports").cast("decimal(28,14)")).alias("psum"),
-    )
-    rate = F.col("n_supported").cast("double") / F.col("n_claims")
-    pred = F.col("psum").cast("double") / F.col("n_claims")
-    return g.select(
-        "bin",
-        "n_claims",
-        "n_supported",
-        rate.alias("support_rate"),
-        pred.alias("mean_pred"),
-        F.abs(rate - pred).alias("calibration_gap"),
     )
 
 
@@ -1525,16 +788,6 @@ KG_QUERIES: dict[str, tuple] = {
 # these get the identical oracle gate in the pytest unregistered lane)
 def _kg_extra_sqls() -> dict[str, str]:
     from .kg_oracle import (
-        kg_bfs_distance_sql,
-        kg_connected_components_sql,
-        kg_coreness_sql,
-        kg_hits_sql,
-        kg_link_prediction_sql,
-        kg_random_walks_sql,
-        kg_weighted_paths_sql,
-        kg_modularity_sql,
-        kg_assortativity_sql,
-        kg_calibration_sql,
         context_tail_sql,
         dpo_pairs_sql,
         tool_cooccurrence_sql,
@@ -1547,16 +800,6 @@ def _kg_extra_sqls() -> dict[str, str]:
     )
 
     return {
-        "kg_coreness": kg_coreness_sql(),
-        "kg_bfs_distance": kg_bfs_distance_sql(),
-        "kg_connected_components": kg_connected_components_sql(),
-        "kg_link_prediction": kg_link_prediction_sql(),
-        "kg_random_walks": kg_random_walks_sql(),
-        "kg_weighted_paths": kg_weighted_paths_sql(),
-        "kg_modularity": kg_modularity_sql(),
-        "kg_hits": kg_hits_sql(),
-        "kg_assortativity": kg_assortativity_sql(),
-        "kg_calibration": kg_calibration_sql(),
         "kg_temporal_facts": kg_temporal_facts_sql(),
         "nli_training_export": nli_training_export_sql(),
         "transcript_turn_stats": transcript_turn_stats_sql(),
@@ -1572,28 +815,6 @@ def _kg_extra_sqls() -> dict[str, str]:
 _KG_EXTRA_SQLS = _kg_extra_sqls()
 
 KG_EXTRA_QUERIES: dict[str, tuple] = {
-    "kg_coreness": (kg_coreness, _KG_EXTRA_SQLS["kg_coreness"]),
-    "kg_bfs_distance": (kg_bfs_distance, _KG_EXTRA_SQLS["kg_bfs_distance"]),
-    "kg_connected_components": (
-        kg_connected_components,
-        _KG_EXTRA_SQLS["kg_connected_components"],
-    ),
-    "kg_link_prediction": (
-        kg_link_prediction,
-        _KG_EXTRA_SQLS["kg_link_prediction"],
-    ),
-    "kg_hits": (kg_hits, _KG_EXTRA_SQLS["kg_hits"]),
-    "kg_random_walks": (kg_random_walks, _KG_EXTRA_SQLS["kg_random_walks"]),
-    "kg_weighted_paths": (
-        kg_weighted_paths,
-        _KG_EXTRA_SQLS["kg_weighted_paths"],
-    ),
-    "kg_modularity": (kg_modularity, _KG_EXTRA_SQLS["kg_modularity"]),
-    "kg_assortativity": (
-        kg_assortativity,
-        _KG_EXTRA_SQLS["kg_assortativity"],
-    ),
-    "kg_calibration": (kg_calibration, _KG_EXTRA_SQLS["kg_calibration"]),
     "transcript_turn_stats": (
         transcript_turn_stats,
         _KG_EXTRA_SQLS["transcript_turn_stats"],
@@ -1748,31 +969,6 @@ _UNREGISTERED = {
     # superset property, and plan shape are pinned on crafted fixtures in
     # tests/test_alias_anchored.py
     "alias_mentions_anchored",
-    # kg_coreness — per-entity k-core number via the h-index iteration (the
-    # graph family's fifth signal; registry is full at 50, and the four
-    # registered kg graph rows already pin the iterative-join machinery);
-    # uniform coreness on the regular synthetic graph is documented —
-    # crafted-graph discrimination pinned in tests/test_kcore.py
-    "kg_coreness",
-    # kg_bfs_distance — multi-source BFS hop distance (the graph family's
-    # sixth signal, reachability; same registry-full rationale as
-    # kg_coreness); the dense synthetic graph collapses to hops {0, 1} —
-    # documented — with multi-hop discrimination pinned on crafted graphs
-    # in tests/test_bfs.py
-    "kg_bfs_distance",
-    # kg_connected_components — the graph family's identity signal: the
-    # pipeline's canonicalization CC core (alternating large-star/small-star
-    # run to fixpoint) exposed over the data-derived entity graph under the
-    # same min-numeric-QID representative rule; oracle is the recursive
-    # min-label CTE (no round-count coupling), crafted-graph behavior pinned
-    # in tests/test_canonicalize.py; same registry-full rationale as
-    # kg_coreness (dedup_lsh_clusters holds the CC machinery's CORR row)
-    "kg_connected_components",
-    # kg_link_prediction — common-neighbor/Jaccard missing-edge inference
-    # (the graph family's seventh signal, KG completion candidates; same
-    # registry-full rationale); hub-cap behavior pinned on crafted graphs
-    # in tests/test_linkpred.py
-    "kg_link_prediction",
     # conv_tool_chain — per-conversation ORDERED tool sequence (the one
     # order-sensitive aggregation; determinism via embedded-key sort,
     # string_agg ORDER BY twin)
@@ -1842,26 +1038,6 @@ _UNREGISTERED = {
     # via the shared Lloyd chain; codes + exact reconstruction error); the
     # embedding family's CORR rows are kmeans_centroids / ann_ivf_topk
     "pq_codes",
-    # kg_random_walks — deterministic DeepWalk-style walk sampling (the
-    # graph family's ninth signal: the graph→training-sequence corpus
-    # generator; same registry-full rationale as kg_coreness); "random"
-    # draws via the portable-hash seeded-draw idiom so the walk corpus is
-    # bit-identical across engines and partition layouts
-    "kg_random_walks",
-    # kg_modularity — Newman modularity contributions per LPA community
-    # (the clustering-quality eval of the family's own detector; the
-    # dedup_pr_eval pairing); fixed 4-op IEEE tree over exact integers
-    "kg_modularity",
-    # kg_weighted_paths — multi-source Bellman-Ford weighted shortest
-    # paths with integer inverse-support edge costs (the graph family's
-    # tenth signal: weighted reachability vs BFS's hop count; same
-    # registry-full rationale as kg_coreness)
-    "kg_weighted_paths",
-    # kg_hits — HITS hubs/authorities (the graph family's eighth signal,
-    # role separation via two-vector mutual recursion; same registry-full
-    # rationale as kg_coreness — kg_pagerank holds the iterative-ranking
-    # CORR row); L1-normalized for cross-engine exactness (sqrt is libm)
-    "kg_hits",
     # sft_pairs — (user → next-assistant) instruction-tuning pair export
     # with the deterministic hash split (the conversational twin of
     # nli_training_export, whose map-only-over-kg shape shares the lane);
@@ -1980,14 +1156,6 @@ _UNREGISTERED = {
     # ground truth (the retrieval twin of dedup_pr_eval; both sides are the
     # repo's own oracled ANN queries reused verbatim)
     "ann_recall_eval",
-    # kg_assortativity — degree-mixing Pearson coefficient over the entity
-    # graph (the graph family's mixing-pattern signal; sufficient-statistics
-    # one-pass, sqrt eliminated by the symmetrized-marginal identity)
-    "kg_assortativity",
-    # kg_calibration — reliability-diagram table for the NLI verdict scorer
-    # (per-bin ECE terms; explicit bin formula, DECIMAL mean discipline) —
-    # the model-monitoring eval beside dedup_pr_eval
-    "kg_calibration",
     # source_lang_hhi — per-source language-mix concentration (HHI + top
     # share; entropy avoided — ln is libm, the token_pmi rule); the
     # corpus collapses to dimension-bounded (source, lang) cells in one

@@ -18,8 +18,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "prove_spark",
@@ -37,12 +35,33 @@ def get_spark(
       memory no matter how wide the text columns are.
     - shuffle.partitions defaults to local core count; on a real cluster set
       it to ~2-3x total executor cores via spark-submit --conf.
+
+    Malformed SPARK_GRAFT_CPUS / SPARK_GRAFT_EXTRA_CONF values raise a
+    ValueError naming the variable before any JVM or session is touched.
     """
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if master is None:
-        master = f"local[{cores}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
+    if master is None or shuffle_partitions is None:
+        raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        try:
+            cores = int(raw)
+        except ValueError:
+            cores = 0
+        if cores < 1:
+            raise ValueError(
+                f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
+            )
+        if master is None:
+            master = f"local[{cores}]"
+        if shuffle_partitions is None:
+            shuffle_partitions = cores
+    # experiment/tuning passthrough: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"
+    env_conf = []
+    for item in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
+        if not item:
+            continue
+        k, sep, v = item.partition("=")
+        if not sep:
+            raise ValueError(f"SPARK_GRAFT_EXTRA_CONF item {item!r} has no '='")
+        env_conf.append((k.strip(), v.strip()))
 
     # Throughput GC for a batch engine: ParallelGC measured ~10% faster than
     # the default G1 on the KG pipeline at BOTH 2 and 8 cores (and scales
@@ -97,11 +116,8 @@ def get_spark(
         # shuffling the fact side a second time for nothing.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     )
-    # experiment/tuning passthrough: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for item in filter(None, env_conf.split(";")):
-        k, _, v = item.partition("=")
-        builder = builder.config(k.strip(), v.strip())
+    for k, v in env_conf:
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

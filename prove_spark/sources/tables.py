@@ -101,14 +101,6 @@ class TableIO:
                 return True
         return False
 
-    def drop(self, table: str) -> None:
-        if self.use_iceberg:
-            self.spark.sql(f"DROP TABLE IF EXISTS {self.ident(table)}")
-            return
-        fs, hpath = self._fs(self.path(table))
-        if fs.exists(hpath):
-            fs.delete(hpath, True)
-
     def read(self, table: str) -> DataFrame:
         if self.use_iceberg:
             return self.spark.read.table(self.ident(table))

@@ -16,7 +16,8 @@ what actually runs) and reports the properties that decide 100 TB behavior:
 
 Writes PLAN_AUDIT.md (one row per query) so each round's plan review is a
 diffable artifact instead of a manual spot-check. Exit code 1 if any FLAGS
-column is non-empty. Usage: python scripts/plan_audit.py [sf_dir]
+column is non-empty, or, before anything runs, if an ALLOWED waiver names no
+audited query. Usage: python scripts/plan_audit.py [sf_dir]
 """
 
 from __future__ import annotations
@@ -74,16 +75,11 @@ ALLOWED: dict[str, tuple[str, int]] = {
     "bloom_semi_join": ("BroadcastNestedLoopJoin", 1),
     # 1-row pair-count broadcast feeding the in-batch bucket arithmetic
     "dpo_pairs": ("BroadcastNestedLoopJoin", 1),
-    # 1-row edge-count (m) broadcast in the modularity summand
-    "kg_modularity": ("BroadcastNestedLoopJoin", 1),
     # 1-row subspace-split-point broadcast feeding each encoder slice (the
     # two final assignment slices re-expand it in the plan string)
     "pq_codes": ("BroadcastNestedLoopJoin", 3),
     # 1-row basket-count broadcast feeding the lift denominator
     "basket_pairs": ("BroadcastNestedLoopJoin", 1),
-    # two 1-row broadcasts (edge count m, node count) riding into the
-    # single-row sufficient-statistics output
-    "kg_assortativity": ("BroadcastNestedLoopJoin", 2),
     # 1-row quantized-weight DECIMAL total broadcast feeding the quota
     "neyman_allocation": ("BroadcastNestedLoopJoin", 1),
     # query-set-sized broadcast (5 rows) — the packed map-side scoring pass:
@@ -149,6 +145,10 @@ def main() -> int:
     # the shared registry mapping — NOT a local re-collection, so a new
     # query-family dict cannot silently fall out of this audit
     unreg = UNREGISTERED_QUERIES
+    stale = sorted(set(ALLOWED) - set(ALL_QUERIES) - set(unreg))
+    if stale:
+        print(f"ALLOWED waivers for no audited query: {stale}", file=sys.stderr)
+        return 1
     spark = get_spark("plan-audit", master="local[8]", shuffle_partitions=8)
 
     rows, failed = [], []

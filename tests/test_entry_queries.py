@@ -4,6 +4,9 @@ sf0.001 (the driver runs the same at sf0.01)."""
 
 from __future__ import annotations
 
+import importlib.util
+from pathlib import Path
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -67,3 +70,13 @@ def test_unregistered_query_matches_duckdb(spark, name):
 def test_unregistered_exposed_and_disjoint():
     assert set(entrymod.unregistered()) == set(_UNREGISTERED)
     assert not set(entrymod.queries()) & set(_UNREGISTERED)
+
+
+def test_plan_audit_waivers_name_audited_queries():
+    # a waiver outliving its query would silently bless the same
+    # anti-pattern in whatever next takes that name
+    path = Path(__file__).resolve().parents[1] / "scripts" / "plan_audit.py"
+    spec = importlib.util.spec_from_file_location("plan_audit", path)
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+    assert set(audit.ALLOWED) <= set(ALL_QUERIES) | set(_UNREG)

@@ -1,8 +1,8 @@
 """Crafted-fixture discrimination pins for the r5 eval/analytics operators
-(the kg_coreness posture: the synthetic corpus exercises the plumbing and the
-oracle equality; these fixtures pin that each statistic actually DISCRIMINATES
-— a degenerate Neyman allocation, in/out-of-window attribution, basket lift,
-a live count-min error lane, packed-vector edge semantics)."""
+(the synthetic corpus exercises the plumbing and the oracle equality; these
+fixtures pin that each statistic actually DISCRIMINATES — a degenerate Neyman
+allocation, in/out-of-window attribution, basket lift, a live count-min error
+lane, packed-vector edge semantics)."""
 
 from __future__ import annotations
 

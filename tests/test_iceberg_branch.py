@@ -149,12 +149,6 @@ def test_overwrite_buckets_replaces_partitions_idempotently(io_and_logs, spark):
     assert chain[2] == "create"
 
 
-def test_drop_issues_drop_table(io_and_logs):
-    io, spark, _df, _w = io_and_logs
-    io.drop("triples")
-    assert "DROP TABLE IF EXISTS prove.triples" in spark.sql_log
-
-
 def test_parquet_mode_unaffected_by_flag(tmp_path):
     """use_iceberg=False still routes to the filesystem path layer (the
     in-sandbox production path, fully covered by test_resume.py)."""
