@@ -38,8 +38,10 @@ import subprocess
 import sys
 import time
 
+from prove_spark.session import graft_cpus
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = graft_cpus()
 # Scaling pair (north rule: N vs 4N): 2 vs 8 cores, NOT 8 vs 32. On this
 # single 32-CPU box the 32-thread run saturates shared memory bandwidth —
 # measured per-phase: the map-heavy extraction phase scales 8→32 at 0.88

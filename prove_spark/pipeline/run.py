@@ -1,7 +1,7 @@
 """End-to-end KG-construction pipeline driver.
 
 build_triples(spark, transcripts) wires the stages (stages.py) plus
-canonicalization into one lazy DataFrame plan; run_pipeline(...) adds the
+canonicalization into one lazy DataFrame plan; run_checkpointed(...) adds the
 materialization + per-bucket checkpoint manifest for resume
 (pipeline/checkpoint.py).
 """

@@ -609,290 +609,3 @@ FROM dim d
 LEFT JOIN subj_stats s USING (canonical_qid)
 LEFT JOIN obj_stats o USING (canonical_qid)"""
     )
-
-
-def kg_temporal_facts_sql() -> str:
-    """Temporal fact-scoping oracle: every verified triple joined back to
-    its source turn's timestamp via the (conv_id, turn_idx) provenance it
-    carries, then rolled up per distinct (subj, pred, obj) fact — mention
-    counts, conversation coverage, support counts, first/last observation
-    and the observation span in exact epoch seconds (integer subtraction;
-    no day-truncation semantics to diverge on)."""
-    cfg = DEFAULT_CONFIG
-    support = _q(list(cfg.classes)[0])
-    return (
-        _kg_ctes()
-        + f""",
-tf_ts AS (
-  SELECT conv_id, turn_idx,
-         TIMESTAMP '2026-01-01 00:00:00'
-           + to_seconds(CAST((doc_id % 1000000) * 1000 + turn_idx * 7
-                             AS BIGINT)) AS ts
-  FROM turns)
-SELECT t.subj, t.pred, t.obj,
-       CAST(COUNT(*) AS BIGINT) AS n_mentions,
-       CAST(COUNT(DISTINCT t.conv_id) AS BIGINT) AS n_convs,
-       CAST(COUNT(*) FILTER (WHERE t.verdict = {support}) AS BIGINT)
-         AS n_supports,
-       MIN(ts.ts) AS first_seen,
-       MAX(ts.ts) AS last_seen,
-       CAST(epoch(MAX(ts.ts)) - epoch(MIN(ts.ts)) AS BIGINT) AS span_seconds
-FROM triples t
-JOIN tf_ts ts ON ts.conv_id = t.conv_id AND ts.turn_idx = t.turn_idx
-GROUP BY 1, 2, 3"""
-    )
-
-
-def nli_training_export_sql() -> str:
-    """Training-pair export oracle: the verified triples projected into the
-    (premise = selected evidence sentence, structured hypothesis fields,
-    label = verdict) rows an NLI fine-tune consumes (reference anchor:
-    finetune.py trains on exactly this shape), with a DETERMINISTIC
-    80/10/10 split by portable md5 hash of the claim id — reproducible on
-    any cluster size / retry / engine, never rand()."""
-    from .textops import PORTABLE_HASH_SQL  # single source of the hash twin
-
-    h = PORTABLE_HASH_SQL.format(x="CONCAT('split|', claim_id)")
-    return (
-        _kg_ctes()
-        + f"""
-SELECT claim_id, conv_id,
-       result_sentence AS premise,
-       subj, pred, obj,
-       verdict AS label,
-       CASE WHEN h10 < 8 THEN 'train' WHEN h10 = 8 THEN 'val'
-            ELSE 'test' END AS split
-FROM (
-  SELECT *, {h} % 10 AS h10
-  FROM triples)"""
-    )
-
-
-# The `tts` CTE: the north-rule input table re-derived in SQL — the `turns`
-# CTE gives conv_id/turn_idx/turn_text, and role/tool/ts are the same pure
-# arithmetic datagen applies — role = ROLES[turn_idx % 3], tool =
-# TOOLS[(doc_id + turn_idx) % 4] for tool turns else '', ts = epoch +
-# (doc_id % 1e6)·1000 + turn_idx·7 seconds (datagen.py:124-127).
-_TTS_CTE = """,
-tts AS (
-  SELECT conv_id, turn_idx, turn_text,
-         CASE turn_idx % 3 WHEN 0 THEN 'user' WHEN 1 THEN 'assistant'
-              ELSE 'tool' END AS role,
-         CASE WHEN turn_idx % 3 = 2
-              THEN CASE (doc_id + turn_idx) % 4
-                   WHEN 0 THEN 'search' WHEN 1 THEN 'browser'
-                   WHEN 2 THEN 'python' ELSE '' END
-              ELSE '' END AS tool,
-         TIMESTAMP '2026-01-01 00:00:00'
-           + to_seconds(CAST((doc_id % 1000000) * 1000 + turn_idx * 7
-                             AS BIGINT)) AS ts
-  FROM turns)"""
-
-
-def transcript_turn_stats_sql() -> str:
-    """Per-role rollup oracle over the north-rule input table itself
-    (conv_id, turn_idx, role, text, tool, ts — the shared _TTS_CTE).
-    Integer/string/timestamp arithmetic plus ONE final IEEE division."""
-    return (
-        _kg_ctes()
-        + _TTS_CTE
-        + """
-SELECT role,
-       CAST(COUNT(*) AS BIGINT) AS n_turns,
-       CAST(COUNT(DISTINCT conv_id) AS BIGINT) AS n_convs,
-       CAST(SUM(length(turn_text)) AS BIGINT) AS total_chars,
-       CAST(SUM(length(turn_text)) AS DOUBLE) / COUNT(*) AS avg_chars,
-       CAST(SUM(CASE WHEN tool <> '' THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_tool_calls,
-       CAST(COUNT(DISTINCT NULLIF(tool, '')) AS BIGINT) AS n_distinct_tools,
-       MIN(ts) AS first_ts,
-       MAX(ts) AS last_ts
-FROM tts GROUP BY role"""
-    )
-
-
-def conv_tool_chain_sql() -> str:
-    """ORDERED string aggregation oracle: per conversation, the '>'-joined
-    tool invocation sequence in turn order (string_agg ... ORDER BY — the
-    SQL-native ordered aggregate), plus call counts. Exercises the
-    order-sensitive aggregation contract that every other agg in the suite
-    is deliberately insensitive to."""
-    return (
-        _kg_ctes()
-        + _TTS_CTE
-        + """
-SELECT conv_id,
-       string_agg(tool, '>' ORDER BY turn_idx) AS tool_chain,
-       CAST(COUNT(*) AS BIGINT) AS n_tool_calls,
-       CAST(COUNT(DISTINCT tool) AS BIGINT) AS n_distinct_tools
-FROM tts WHERE tool <> '' GROUP BY conv_id"""
-    )
-
-
-def sft_pairs_sql() -> str:
-    """SFT training-pair oracle: every (user turn → immediately following
-    assistant turn) adjacency in the north-rule input table, projected as
-    (prompt, response) with the same deterministic portable-hash 80/10/10
-    split the NLI export uses. LEAD over (conv_id, turn_idx) is the SQL
-    twin of the Spark window; the nidx = turn_idx + 1 adjacency guard makes
-    the contract correct on gappy turn sequences, not just dense ones."""
-    from .textops import PORTABLE_HASH_SQL  # single source of the hash twin
-
-    h = PORTABLE_HASH_SQL.format(
-        x="CONCAT('sft|', conv_id, '|', CAST(turn_idx AS VARCHAR))"
-    )
-    return (
-        _kg_ctes()
-        + _TTS_CTE
-        + f""",
-sft_led AS (
-  SELECT conv_id, turn_idx, role, turn_text,
-         LEAD(role) OVER w AS nrole,
-         LEAD(turn_text) OVER w AS ntext,
-         LEAD(turn_idx) OVER w AS nidx
-  FROM tts
-  WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx))
-SELECT conv_id,
-       CAST(turn_idx AS BIGINT) AS prompt_turn_idx,
-       turn_text AS prompt,
-       ntext AS response,
-       CASE WHEN h10 < 8 THEN 'train' WHEN h10 = 8 THEN 'val'
-            ELSE 'test' END AS split
-FROM (SELECT *, {h} % 10 AS h10
-      FROM sft_led
-      WHERE role = 'user' AND nrole = 'assistant'
-        AND nidx = turn_idx + 1)"""
-    )
-
-
-# Context-assembly token budget: the longest turn SUFFIX of each
-# conversation whose whitespace-token total stays <= this many tokens is
-# kept (the newest-first truncation every chat LM serving/training stack
-# applies). Module constant, not config, so the oracle literal cannot
-# drift from the Spark plan. 48 discriminates on the synthetic turns
-# (turns run ~1-31 tokens, median 15; conversations median 79 tokens over
-# ~5 turns — so roughly half the conversations get truncated).
-CONTEXT_BUDGET = 48
-
-
-DPO_BATCH = 8  # in-batch negative-sampling batch size
-
-
-def dpo_pairs_sql() -> str:
-    """DPO preference-pair oracle: the SFT pair relation (reused VERBATIM
-    as a wrapped CTE — single source with sft_pairs_sql, so the pair
-    derivation cannot drift) plus a deterministic in-batch negative: pairs
-    are hash-bucketed into batches of ~DPO_BATCH, and each pair's
-    `rejected` is the NEXT pair's chosen response in the hash-shuffled
-    bucket ring (cyclic LEAD → FIRST_VALUE). Rows whose sampled negative
-    equals the chosen response (singleton buckets, duplicate responses)
-    are dropped on BOTH sides. Integer/string only."""
-    from .textops import PORTABLE_HASH_SQL  # single source of the hash twin
-
-    h = PORTABLE_HASH_SQL.format(
-        x="CONCAT('dpo|', conv_id, '|', CAST(prompt_turn_idx AS VARCHAR))"
-    )
-    return f"""
-WITH sftp AS MATERIALIZED ({sft_pairs_sql()}),
-dpo_n AS (SELECT COUNT(*) AS n_pairs FROM sftp),
-dpo_h AS (
-  SELECT s.*, {h} AS h,
-         {h} % GREATEST((n.n_pairs + {DPO_BATCH - 1}) // {DPO_BATCH}, 1)
-           AS bucket
-  FROM sftp s CROSS JOIN dpo_n n),
-dpo_r AS (
-  SELECT conv_id, prompt_turn_idx, prompt, response AS chosen, split,
-         COALESCE(
-           LEAD(response) OVER w,
-           FIRST_VALUE(response) OVER (
-             PARTITION BY bucket ORDER BY h, conv_id, prompt_turn_idx
-             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         ) AS rejected
-  FROM dpo_h
-  WINDOW w AS (PARTITION BY bucket ORDER BY h, conv_id, prompt_turn_idx))
-SELECT * FROM dpo_r WHERE rejected <> chosen"""
-
-
-def tool_transitions_sql() -> str:
-    """Markov tool-transition oracle: LEAD over the tool-filtered turn
-    sequence of the shared tts CTE, combinable pair counts, row-stochastic
-    probability = one IEEE division of exact counts."""
-    return (
-        _kg_ctes()
-        + _TTS_CTE
-        + """,
-mk_p AS (
-  SELECT tool, LEAD(tool) OVER (
-           PARTITION BY conv_id ORDER BY turn_idx) AS next_tool
-  FROM tts WHERE tool <> ''),
-mk_c AS (
-  SELECT tool, next_tool, COUNT(*) AS n_transitions
-  FROM mk_p WHERE next_tool IS NOT NULL GROUP BY 1, 2),
-mk_t AS (SELECT tool, SUM(n_transitions) AS n_total FROM mk_c GROUP BY 1)
-SELECT c.tool, c.next_tool,
-       CAST(c.n_transitions AS BIGINT) AS n_transitions,
-       CAST(c.n_transitions AS DOUBLE) / t.n_total AS prob
-FROM mk_c c JOIN mk_t t ON t.tool = c.tool"""
-    )
-
-
-def context_tail_sql() -> str:
-    """Context-window truncation oracle: per-turn whitespace token counts,
-    suffix-cumulative sum via SUM OVER (ORDER BY turn_idx DESC ROWS
-    UNBOUNDED PRECEDING), keep rows with suffix_tokens <= CONTEXT_BUDGET.
-    Integers/strings only — no float discipline needed."""
-    return (
-        _kg_ctes()
-        + _TTS_CTE
-        + f""",
-ctx_tok AS (
-  SELECT conv_id, turn_idx, role,
-         len(string_split(turn_text, ' ')) AS n_tokens
-  FROM tts),
-ctx_suf AS (
-  SELECT conv_id, turn_idx, role, n_tokens,
-         SUM(n_tokens) OVER (PARTITION BY conv_id ORDER BY turn_idx DESC
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS suffix_tokens
-  FROM ctx_tok)
-SELECT conv_id, CAST(turn_idx AS BIGINT) AS turn_idx, role,
-       CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(suffix_tokens AS BIGINT) AS suffix_tokens
-FROM ctx_suf WHERE suffix_tokens <= {CONTEXT_BUDGET}"""
-    )
-
-
-TOOL_COOCCUR_MIN_SUPP = 2
-
-
-def tool_cooccurrence_sql() -> str:
-    """Order-free tool co-occurrence oracle: the basket_pairs shape over
-    the shared tts CTE (conversations as baskets, tools as items) — distinct
-    (conv, tool) relation, a < b self-join pairs, support threshold,
-    confidence and lift as single IEEE divisions of exact-integer
-    products."""
-    return (
-        _kg_ctes()
-        + _TTS_CTE
-        + f""",
-tc_i AS (
-  SELECT DISTINCT conv_id AS k, tool FROM tts WHERE tool <> ''),
-tc_n AS (SELECT CAST(COUNT(DISTINCT k) AS BIGINT) AS n_convs FROM tc_i),
-tc_s AS (SELECT tool, COUNT(*) AS s FROM tc_i GROUP BY 1),
-tc_p AS (
-  SELECT a.tool AS ta, b.tool AS tb, COUNT(*) AS supp_ab
-  FROM tc_i a JOIN tc_i b ON b.k = a.k AND a.tool < b.tool
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {TOOL_COOCCUR_MIN_SUPP})
-SELECT p.ta AS tool_a, p.tb AS tool_b,
-       CAST(p.supp_ab AS BIGINT) AS supp_ab,
-       CAST(sa.s AS BIGINT) AS supp_a,
-       CAST(sb.s AS BIGINT) AS supp_b,
-       CAST(p.supp_ab AS DOUBLE) / CAST(sa.s AS DOUBLE) AS confidence,
-       CAST(p.supp_ab * n.n_convs AS DOUBLE)
-         / CAST(sa.s * sb.s AS DOUBLE) AS lift
-FROM tc_p p
-JOIN tc_s sa ON sa.tool = p.ta
-JOIN tc_s sb ON sb.tool = p.tb
-CROSS JOIN tc_n n"""
-    )

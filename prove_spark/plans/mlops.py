@@ -603,7 +603,7 @@ def quantize_embeddings(spark, sf_dir):
     )
 
 
-# the parallel UNNESTs zip positionally (the jl_project idiom); i is 0-based
+# the parallel UNNESTs zip positionally; i is 0-based
 # to match posexplode
 QUANTIZE_SQL = """
 WITH v AS (
@@ -815,8 +815,7 @@ ANN_RECALL_SQL = _ann_recall_sql()
 def embedding_covariance(spark, sf_dir):
     """Sample covariance matrix of the embedding columns — the PCA/whitening
     precursor (the dim×dim aggregate every dimensionality-reduction or
-    decorrelation step starts from; [jl_project_embeddings] compresses with
-    a DATA-BLIND random matrix — this computes the data-DRIVEN second
+    decorrelation step starts from; these are the data-DRIVEN second
     moments a learned projection needs): upper-triangle (i ≤ j) entries
     cov(i,j) = (Σx_i·x_j − Σx_i·Σx_j/n)/(n−1).
 

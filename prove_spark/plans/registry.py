@@ -6,12 +6,13 @@ DuckDB: the derivation is deterministic arithmetic over `documents` and the
 kernels are regex/set algebra), on top of the pytest golden suite against
 the pandas oracle (tests/test_pipeline_golden.py).
 
-Ordering/size: the KG lane leads and the registry is capped at 50 entries —
-the driver sweep records at most 50 rows, and every registered query must
-get a row. Queries beyond the cap are intentionally unregistered (see
-_UNREGISTERED below; each still oracle-checked in pytest via
-tests/test_entry_queries.py's unregistered lane, and exposed through
-__spark_entry__.unregistered() so the exclusion is visible at runtime).
+Ordering/size: ALL_QUERIES is the KG lane (KG_QUERIES) followed by every
+family dict in _FAMILIES order, capped at 50 entries — the driver sweep
+records at most 50 rows, and every registered query must get a row. The
+family queries named in _UNREGISTERED form UNREGISTERED_QUERIES instead:
+each is still oracle-checked in pytest (tests/test_entry_queries.py's
+unregistered lane) and exposed through __spark_entry__.unregistered() so
+the exclusion is visible at runtime.
 """
 
 from __future__ import annotations
@@ -22,7 +23,6 @@ from pyspark.sql.window import Window
 from .advanced import ADVANCED_QUERIES
 from .iterstate import truncate_round
 from .disambig import DISAMBIG_QUERIES
-from .lmops import LMOPS_QUERIES
 from .mlops import MLOPS_QUERIES
 from .relational import RELATIONAL_QUERIES
 from .textops import TEXTOPS_QUERIES
@@ -315,430 +315,6 @@ def kg_label_propagation(spark, sf_dir):
     )
 
 
-def transcript_turn_stats(spark, sf_dir):
-    """Per-role descriptive rollup over the north-rule input table ITSELF
-    (conv_id, turn_idx, role, text, tool, ts — BASELINE.json input_hint):
-    turn counts, conversation coverage, character volume, tool-call rates,
-    and the time span, per role. The ingest-side data-profile a transcript
-    pipeline runs before KG construction (the kg lane consumes this same
-    relation; this query pins the relation's own statistics cross-engine,
-    including the role/tool/ts columns the triples path doesn't touch).
-
-    Scale shape: ONE scan → one map-side-combinable groupBy on a 3-value
-    key; the two distinct aggs (convs, tools) expand to the standard
-    two-pass partial-distinct plan. avg_chars is the single final IEEE
-    division (correctly rounded in both engines)."""
-    from ..datagen import transcripts_df
-
-    tr = transcripts_df(spark, sf_dir)
-    agg = tr.groupBy("role").agg(
-        F.count("*").alias("n_turns"),
-        F.countDistinct("conv_id").alias("n_convs"),
-        F.sum(F.length("text")).alias("total_chars"),
-        F.count(F.when(F.col("tool") != "", True)).alias("n_tool_calls"),
-        F.countDistinct(
-            F.when(F.col("tool") != "", F.col("tool"))
-        ).alias("n_distinct_tools"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-    )
-    return agg.select(
-        "role",
-        F.col("n_turns").cast("long").alias("n_turns"),
-        F.col("n_convs").cast("long").alias("n_convs"),
-        F.col("total_chars").cast("long").alias("total_chars"),
-        (F.col("total_chars").cast("double") / F.col("n_turns")).alias(
-            "avg_chars"
-        ),
-        F.col("n_tool_calls").cast("long").alias("n_tool_calls"),
-        F.col("n_distinct_tools").cast("long").alias("n_distinct_tools"),
-        "first_ts",
-        "last_ts",
-    )
-
-
-def kg_temporal_facts(spark, sf_dir):
-    """Temporal scoping of verified facts — the Wikidata-qualifier-style
-    time dimension over the constructed KG: every triple carries its
-    (conv_id, turn_idx) provenance, so joining back to the transcripts
-    relation recovers WHEN each fact was observed; rolled up per distinct
-    (subj, pred, obj) as mention count, conversation coverage, support
-    count, first/last observation and exact span in epoch seconds.
-
-    Scale shape: the provenance join keys on (conv_id, turn_idx) — the
-    transcripts side projects 3 columns (predicate pushdown keeps the text
-    column out of the exchange) and the rollup is one map-side-combinable
-    groupBy (+ the standard partial-distinct expansion for n_convs);
-    integers/timestamps only — span via exact BIGINT epoch subtraction
-    (no day-truncation semantics to diverge cross-engine)."""
-    from ..config import DEFAULT_CONFIG
-    from ..datagen import transcripts_df
-
-    support = list(DEFAULT_CONFIG.classes)[0]
-    triples = _kg_build(spark, sf_dir)
-    turns = transcripts_df(spark, sf_dir).select("conv_id", "turn_idx", "ts")
-    joined = triples.select(
-        "subj", "pred", "obj", "conv_id", "turn_idx", "verdict"
-    ).join(turns, ["conv_id", "turn_idx"])
-    return joined.groupBy("subj", "pred", "obj").agg(
-        F.count("*").cast("long").alias("n_mentions"),
-        F.countDistinct("conv_id").cast("long").alias("n_convs"),
-        F.count(F.when(F.col("verdict") == support, True))
-        .cast("long")
-        .alias("n_supports"),
-        F.min("ts").alias("first_seen"),
-        F.max("ts").alias("last_seen"),
-        (
-            F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))
-        )
-        .cast("long")
-        .alias("span_seconds"),
-    )
-
-
-def nli_training_export(spark, sf_dir):
-    """Training-pair export from the constructed KG — the dataset the
-    reference's NLI fine-tune consumes (finetune.py trains on
-    (evidence sentence, claim, label) rows; ProVe utils/finetune:
-    declared non-goal for TRAINING, but the data EXPORT is a pipeline op):
-    premise = the selected evidence sentence each triple carries, the
-    structured hypothesis fields (subj, pred, obj), label = the verdict,
-    plus a DETERMINISTIC 80/10/10 train/val/test split by portable md5
-    hash of claim_id — bit-reproducible on any cluster size / retry /
-    engine (rand()/randomSplit are partition-layout dependent; a training
-    snapshot must not be).
-
-    Scale shape: a pure map-side projection over the triples relation —
-    zero additional exchanges beyond the pipeline's own."""
-    from .textops import _portable_hash
-
-    t = _kg_build(spark, sf_dir)
-    h10 = F.pmod(
-        _portable_hash(F.concat(F.lit("split|"), F.col("claim_id"))),
-        F.lit(10),
-    )
-    return t.select(
-        "claim_id",
-        "conv_id",
-        F.col("result_sentence").alias("premise"),
-        "subj",
-        "pred",
-        "obj",
-        F.col("verdict").alias("label"),
-        F.when(h10 < 8, F.lit("train"))
-        .when(h10 == 8, F.lit("val"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
-    )
-
-
-def conv_tool_chain(spark, sf_dir):
-    """Per-conversation ORDERED tool-invocation sequence over the
-    north-rule input table: the '>'-joined chain of tools in turn order
-    plus call counts — the agent-behavior signature a transcript pipeline
-    mines (which tool pipelines do agents actually run?). Exercises the
-    order-SENSITIVE aggregation contract: `collect_list` is not
-    order-stable under retries/partitioning, so determinism comes from
-    sorting by an embedded key — array_sort over (turn_idx, tool) structs,
-    then project the tool — mirrored by SQL-native
-    `string_agg(... ORDER BY turn_idx)` in the oracle.
-
-    Scale shape: ONE combinable groupBy on conv_id; per-group state is the
-    conversation's own tool turns (conversation-bounded, never
-    corpus-bounded); the struct sort is per-group and tiny."""
-    from ..datagen import transcripts_df
-
-    tr = (
-        transcripts_df(spark, sf_dir)
-        .where(F.col("tool") != "")
-        .select("conv_id", "turn_idx", "tool")
-    )
-    return tr.groupBy("conv_id").agg(
-        F.concat_ws(
-            ">",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("turn_idx", "tool"))),
-                lambda st: st["tool"],
-            ),
-        ).alias("tool_chain"),
-        F.count("*").cast("long").alias("n_tool_calls"),
-        F.countDistinct("tool").cast("long").alias("n_distinct_tools"),
-    )
-
-
-def sft_pairs(spark, sf_dir):
-    """SFT training-pair extraction from the north-rule input table: every
-    (user turn → immediately following assistant turn) adjacency becomes a
-    (prompt, response) row — the instruction-tuning twin of
-    [nli_training_export] (that one exports the VERIFIED-triple feed; this
-    one exports the raw conversational feed every chat fine-tune consumes),
-    with the same deterministic portable-hash 80/10/10 split (rand()/
-    randomSplit are partition-layout dependent; a training snapshot must
-    not be). The nidx == turn_idx + 1 adjacency guard makes the contract
-    correct on gappy turn sequences (tool turns, redacted spans), not just
-    the dense synthetic ones.
-
-    Scale shape: ONE window over (conv_id, turn_idx) — per-conversation
-    state, never corpus-bounded — then a map-only filter + projection;
-    the hash split is a pure projection riding the same stage."""
-    from ..datagen import transcripts_df
-    from .textops import _portable_hash
-
-    tr = transcripts_df(spark, sf_dir).select(
-        "conv_id", "turn_idx", "role", "text"
-    )
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    led = tr.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "text",
-        F.lead("role").over(w).alias("nrole"),
-        F.lead("text").over(w).alias("ntext"),
-        F.lead("turn_idx").over(w).alias("nidx"),
-    )
-    h10 = F.pmod(
-        _portable_hash(
-            F.concat(
-                F.lit("sft|"),
-                F.col("conv_id"),
-                F.lit("|"),
-                F.col("turn_idx").cast("string"),
-            )
-        ),
-        F.lit(10),
-    )
-    return led.where(
-        (F.col("role") == "user")
-        & (F.col("nrole") == "assistant")
-        & (F.col("nidx") == F.col("turn_idx") + 1)
-    ).select(
-        "conv_id",
-        F.col("turn_idx").cast("long").alias("prompt_turn_idx"),
-        F.col("text").alias("prompt"),
-        F.col("ntext").alias("response"),
-        F.when(h10 < 8, F.lit("train"))
-        .when(h10 == 8, F.lit("val"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
-    )
-
-
-def dpo_pairs(spark, sf_dir):
-    """DPO preference-pair export with deterministic in-batch negative
-    sampling — the preference-optimization twin of [sft_pairs] (whose
-    relation is reused VERBATIM as the source, so the pair derivation is
-    single-sourced): each (prompt, chosen) pair gets a `rejected` response
-    sampled from the rest of the corpus the way contrastive/DPO trainers
-    sample in-batch negatives — pairs are hash-bucketed into batches of
-    ~DPO_BATCH and each pair's rejected is the NEXT pair's chosen response
-    in the hash-shuffled bucket ring (cyclic lead → first_value). The
-    sampling is the portable-hash seeded-draw idiom: no RNG state, so the
-    export is bit-identical across engines and partition layouts. Rows
-    whose sampled negative equals the chosen response (singleton buckets,
-    duplicate responses) are dropped on both sides.
-
-    Scale shape: batch count = ceil(n_pairs / DPO_BATCH) rides as a 1-row
-    broadcast (integer `div` arithmetic — never a double division); the
-    ring windows are PARTITIONED by bucket (~DPO_BATCH rows each — batch
-    count grows with the corpus, bucket size stays constant, so no window
-    ever orders more than a batch); everything else is map-only
-    projection."""
-    from .kg_oracle import DPO_BATCH
-    from .textops import _portable_hash
-
-    base = sft_pairs(spark, sf_dir)
-    h = _portable_hash(
-        F.concat(
-            F.lit("dpo|"),
-            F.col("conv_id"),
-            F.lit("|"),
-            F.col("prompt_turn_idx").cast("string"),
-        )
-    )
-    n = base.agg(F.count("*").alias("n_pairs"))  # 1 row
-    b = base.crossJoin(F.broadcast(n)).select(
-        "conv_id",
-        "prompt_turn_idx",
-        "prompt",
-        F.col("response").alias("chosen"),
-        "split",
-        h.alias("h"),
-        F.pmod(
-            h,
-            F.greatest(
-                F.expr(f"(n_pairs + {DPO_BATCH - 1}) div {DPO_BATCH}"),
-                F.lit(1).cast("long"),
-            ),
-        ).alias("bucket"),
-    )
-    wb = Window.partitionBy("bucket").orderBy(
-        "h", "conv_id", "prompt_turn_idx"
-    )
-    wfull = wb.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    out = b.select(
-        "conv_id",
-        "prompt_turn_idx",
-        "prompt",
-        "chosen",
-        "split",
-        F.coalesce(
-            F.lead("chosen").over(wb), F.first("chosen").over(wfull)
-        ).alias("rejected"),
-    )
-    return out.where(F.col("rejected") != F.col("chosen"))
-
-
-def tool_cooccurrence(spark, sf_dir):
-    """Order-free tool co-occurrence over the north-rule input table — the
-    association view of agent behavior next to [tool_transitions]' ordered
-    Markov view (WHICH tools appear in the same conversation, regardless of
-    sequence — the capability-bundle signal; the [basket_pairs] shape with
-    conversations as baskets and tools as items): same-conversation tool
-    pairs with support, confidence, and lift, pruned below
-    TOOL_COOCCUR_MIN_SUPP.
-
-    Scale shape: the pair enumeration is ONE self-equi-join on conv_id over
-    the distinct (conv, tool) relation — fan-out per conversation is
-    (distinct tools)², bounded by the tool dictionary, never corpus²; tool
-    supports are a tool-dimension broadcast; the conversation total rides
-    as a 1-row broadcast. Integer counts, two exact-integer divisions."""
-    from ..datagen import transcripts_df
-    from .kg_oracle import TOOL_COOCCUR_MIN_SUPP
-
-    items = (
-        transcripts_df(spark, sf_dir)
-        .where(F.col("tool") != "")
-        .select("conv_id", "tool")
-        .distinct()
-    )
-    n_df = items.select("conv_id").distinct().agg(
-        F.count("*").alias("n_convs")
-    )
-    supp = items.groupBy(F.col("tool").alias("t")).agg(
-        F.count("*").alias("s")
-    )
-    a = items.select(F.col("conv_id").alias("k"), F.col("tool").alias("ta"))
-    b = items.select(F.col("conv_id").alias("k"), F.col("tool").alias("tb"))
-    pairs = (
-        a.join(b, "k")
-        .where(F.col("ta") < F.col("tb"))
-        .groupBy("ta", "tb")
-        .agg(F.count("*").alias("supp_ab"))
-        .where(F.col("supp_ab") >= TOOL_COOCCUR_MIN_SUPP)
-    )
-    sa = supp.select(F.col("t").alias("ta"), F.col("s").alias("supp_a"))
-    sb = supp.select(F.col("t").alias("tb"), F.col("s").alias("supp_b"))
-    return (
-        pairs.join(F.broadcast(sa), "ta")
-        .join(F.broadcast(sb), "tb")
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("ta").alias("tool_a"),
-            F.col("tb").alias("tool_b"),
-            F.col("supp_ab").cast("long").alias("supp_ab"),
-            F.col("supp_a").cast("long").alias("supp_a"),
-            F.col("supp_b").cast("long").alias("supp_b"),
-            (
-                F.col("supp_ab").cast("double")
-                / F.col("supp_a").cast("double")
-            ).alias("confidence"),
-            (
-                (F.col("supp_ab") * F.col("n_convs")).cast("double")
-                / (F.col("supp_a") * F.col("supp_b")).cast("double")
-            ).alias("lift"),
-        )
-    )
-
-
-def tool_transitions(spark, sf_dir):
-    """First-order Markov transition matrix over tool invocations — the
-    agent-behavior analytics the north-rule input table exists to answer
-    (which tool follows which?): per conversation, consecutive TOOL-BEARING
-    turns form (tool → next_tool) transitions; the output is the count and
-    the row-stochastic probability per source tool. The estimation twin of
-    [conv_tool_chain] (that one exports the ordered sequence; this one fits
-    the chain model on it).
-
-    Scale shape: ONE conv-partitioned window (lead over turn order on the
-    tool-filtered rows — per-conversation state, never corpus-bounded), a
-    combinable (tool, next_tool) count, and a broadcast-sized per-tool
-    total join (the tool vocabulary is a dimension). prob = one IEEE
-    division of exact counts."""
-    from ..datagen import transcripts_df
-
-    tr = transcripts_df(spark, sf_dir).select("conv_id", "turn_idx", "tool")
-    return _transition_matrix(tr)
-
-
-def _transition_matrix(tr):
-    """Markov transition-estimation core over (conv_id, turn_idx, tool) —
-    factored out so tests can drive crafted sequences directly (the
-    synthetic corpus's tool pattern is CYCLIC, so its matrix degenerates
-    to single-destination rows; tests/test_transitions.py pins the
-    multi-destination probabilities)."""
-    tb = tr.where(F.col("tool") != "")
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    pairs = tb.select(
-        "tool", F.lead("tool").over(w).alias("next_tool")
-    ).where(F.col("next_tool").isNotNull())
-    cnt = pairs.groupBy("tool", "next_tool").agg(
-        F.count("*").alias("n_transitions")
-    )
-    tot = cnt.groupBy("tool").agg(
-        F.sum("n_transitions").alias("n_total")
-    )
-    return cnt.join(F.broadcast(tot), "tool").select(
-        "tool",
-        "next_tool",
-        F.col("n_transitions").cast("long").alias("n_transitions"),
-        (
-            F.col("n_transitions").cast("double") / F.col("n_total")
-        ).alias("prob"),
-    )
-
-
-def context_tail(spark, sf_dir):
-    """Token-budget context-window truncation over the north-rule input
-    table: per conversation, keep the longest turn SUFFIX whose whitespace
-    token total stays <= CONTEXT_BUDGET — the newest-first truncation every
-    chat LM serving/training stack applies before tokenization (the
-    per-conversation inverse of [pack_sequences], which fuses documents UP
-    to a budget; this trims one conversation DOWN to it). A turn is kept
-    iff its suffix-cumulative token count fits; the whole-suffix contract
-    means a single over-budget final turn yields an empty context for that
-    conversation (policy documented, mirrored exactly by the oracle).
-
-    Scale shape: ONE window over (conv_id, turn_idx DESC) with a running
-    ROWS frame — per-conversation state — then a map-only filter; token
-    counting is split() bound in its own projection (the O(words²)
-    re-split trap documented at [bigram_lm_score]). Integers/strings only."""
-    from ..datagen import transcripts_df
-    from .kg_oracle import CONTEXT_BUDGET
-
-    tr = transcripts_df(spark, sf_dir).select(
-        "conv_id", "turn_idx", "role", F.split("text", " ").alias("ws")
-    )
-    tok = tr.select(
-        "conv_id", "turn_idx", "role", F.size("ws").alias("n_tokens")
-    )
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy(F.desc("turn_idx"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    suf = tok.withColumn("suffix_tokens", F.sum("n_tokens").over(w))
-    return suf.where(F.col("suffix_tokens") <= CONTEXT_BUDGET).select(
-        "conv_id",
-        F.col("turn_idx").cast("long").alias("turn_idx"),
-        "role",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("suffix_tokens").cast("long").alias("suffix_tokens"),
-    )
-
-
 def _kg_sqls() -> dict[str, str]:
     from .kg_oracle import (
         kg_entities_sql,
@@ -769,10 +345,9 @@ KG_QUERIES: dict[str, tuple] = {
     "kg_top_supported": (kg_top_supported, _SQLS["kg_top_supported"]),
     "kg_pagerank": (kg_pagerank, _SQLS["kg_pagerank"]),
     "kg_entities": (kg_entities, _SQLS["kg_entities"]),
-    # registered r5 (rotating out usage_stats): triangle counting is a
-    # genuinely distinct graph capability (degree-oriented wedge join)
-    # where usage_stats repeated the plain-groupBy shape other CORR rows
-    # already pin
+    # registered r5: triangle counting is a genuinely distinct graph
+    # capability (degree-oriented wedge join); the plain-groupBy rollup it
+    # rotated out repeated a shape other CORR rows already pin
     "kg_triangles": (kg_triangles, _SQLS["kg_triangles"]),
     # registered r5 (rotating out url_host_extract — the r4 verdict's named
     # rotation candidate, a single parse_url projection whose map-only shape
@@ -784,78 +359,9 @@ KG_QUERIES: dict[str, tuple] = {
     ),
 }
 
-# KG-family queries held out of the sweep cap (the registry is full at 50;
-# these get the identical oracle gate in the pytest unregistered lane)
-def _kg_extra_sqls() -> dict[str, str]:
-    from .kg_oracle import (
-        context_tail_sql,
-        dpo_pairs_sql,
-        tool_cooccurrence_sql,
-        tool_transitions_sql,
-        conv_tool_chain_sql,
-        kg_temporal_facts_sql,
-        nli_training_export_sql,
-        sft_pairs_sql,
-        transcript_turn_stats_sql,
-    )
-
-    return {
-        "kg_temporal_facts": kg_temporal_facts_sql(),
-        "nli_training_export": nli_training_export_sql(),
-        "transcript_turn_stats": transcript_turn_stats_sql(),
-        "conv_tool_chain": conv_tool_chain_sql(),
-        "sft_pairs": sft_pairs_sql(),
-        "dpo_pairs": dpo_pairs_sql(),
-        "tool_transitions": tool_transitions_sql(),
-        "tool_cooccurrence": tool_cooccurrence_sql(),
-        "context_tail": context_tail_sql(),
-    }
-
-
-_KG_EXTRA_SQLS = _kg_extra_sqls()
-
-KG_EXTRA_QUERIES: dict[str, tuple] = {
-    "transcript_turn_stats": (
-        transcript_turn_stats,
-        _KG_EXTRA_SQLS["transcript_turn_stats"],
-    ),
-    "kg_temporal_facts": (
-        kg_temporal_facts,
-        _KG_EXTRA_SQLS["kg_temporal_facts"],
-    ),
-    "nli_training_export": (
-        nli_training_export,
-        _KG_EXTRA_SQLS["nli_training_export"],
-    ),
-    "conv_tool_chain": (
-        conv_tool_chain,
-        _KG_EXTRA_SQLS["conv_tool_chain"],
-    ),
-    "sft_pairs": (sft_pairs, _KG_EXTRA_SQLS["sft_pairs"]),
-    "dpo_pairs": (dpo_pairs, _KG_EXTRA_SQLS["dpo_pairs"]),
-    "tool_transitions": (
-        tool_transitions,
-        _KG_EXTRA_SQLS["tool_transitions"],
-    ),
-    "tool_cooccurrence": (
-        tool_cooccurrence,
-        _KG_EXTRA_SQLS["tool_cooccurrence"],
-    ),
-    "context_tail": (context_tail, _KG_EXTRA_SQLS["context_tail"]),
-}
-
 # Intentionally unregistered to stay under the driver's 50-row sweep cap
 # (still importable + unit-tested; exposed via __spark_entry__.unregistered()
 # so sweep reports can show the exclusions):
-#   salted_pivot_counts — the exact machinery kg_entity_rollup's oracled row
-#     covers (salted_event_counts keeps the salted-agg CORR row)
-#   q18_large_orders — third of three near-isomorphic TPC-H join/agg queries
-#     (q3 stays registered as the family representative); retired in favor
-#     of kg_top_supported (r4)
-#   q10_returned_items — second of the three; retired in favor of
-#     dedup_lsh_clusters (r4), which covers a genuinely distinct capability
-#     (LSH candidates → connected components → per-cluster representative)
-#     where q10 repeated q3's join/agg/topN shape
 #   stratified_sample — r4 data-mixing primitive; oracle-checked in pytest
 #     (tests/test_entry_queries.py covers unregistered-but-oracled entries)
 #   moving_avg_user_value — second of two frame-spec window queries
@@ -869,14 +375,6 @@ KG_EXTRA_QUERIES: dict[str, tuple] = {
 #     pack_sequences (token-budget sequence packing — the corpus → training
 #     sequences step)
 _UNREGISTERED = {
-    # usage_stats — plain groupBy/agg usage rollup whose shape is pinned by
-    # several other CORR rows (top_sources_by_docs, rollup_order_stats);
-    # rotated out r5 in favor of kg_triangles (degree-oriented triangle
-    # counting — a genuinely new graph capability in the sweep)
-    "usage_stats",
-    "salted_pivot_counts",
-    "q18_large_orders",
-    "q10_returned_items",
     "stratified_sample",
     "moving_avg_user_value",
     "cube_event_stats",
@@ -908,13 +406,6 @@ _UNREGISTERED = {
     # sketch table merged later); randomized sketch → no SQL oracle by
     # design, rank guarantee pinned in pytest beside the HLL/GK rows
     "kll_sketch_rollup",
-    # variant_extract_props — Spark 4 VARIANT semi-structured path (parse
-    # once, typed binary path extraction); json_extract_props keeps the
-    # F9 CORR row
-    "variant_extract_props",
-    # profile_events — single-pass DESCRIBE-style column profiling (typed
-    # min/max lanes to keep cross-engine hash parity off double rendering)
-    "profile_events",
     # lateral_top_orders — Spark 4 correlated lateralJoin family (Catalyst
     # decorrelates to the ranked-window shape; topk_per_group keeps the W1
     # CORR row)
@@ -942,20 +433,6 @@ _UNREGISTERED = {
     # identity on the PII-free synthetic corpus, behavior pinned on crafted
     # fixtures in pytest
     "redact_pii",
-    # jl_project_embeddings / bigram_lm_score — representation compression
-    # (sparse JL projection) and corpus-trained LM quality scoring; the
-    # embedding and quality families already hold CORR rows
-    # (kmeans_centroids, ann_ivf_topk, quality_scores)
-    "jl_project_embeddings",
-    "bigram_lm_score",
-    # curriculum_bins — per-source quartile binning of the LM score (the
-    # quality-curriculum schedule input); composes bigram_lm_score, whose
-    # arithmetic the LM rows pin
-    "curriculum_bins",
-    # chunk_documents — sliding-window passage chunking (W=64/S=48 with
-    # overlap), the RAG/context-budget inverse of pack_sequences (which
-    # holds the family's CORR row); map-only explode, integers/strings only
-    "chunk_documents",
     # url_host_extract — single parse_url projection (C9) whose map-only
     # shape several CORR rows pin; rotated out r5 in favor of
     # kg_label_propagation (community detection — a genuinely new graph
@@ -969,10 +446,6 @@ _UNREGISTERED = {
     # superset property, and plan shape are pinned on crafted fixtures in
     # tests/test_alias_anchored.py
     "alias_mentions_anchored",
-    # conv_tool_chain — per-conversation ORDERED tool sequence (the one
-    # order-sensitive aggregation; determinism via embedded-key sort,
-    # string_agg ORDER BY twin)
-    "conv_tool_chain",
     # retention_cohorts — first-seen-week cohort retention triangle
     # (exact integer week arithmetic; the min-agg/join/distinct shapes
     # are CORR-pinned elsewhere)
@@ -981,26 +454,14 @@ _UNREGISTERED = {
     # (DataFrame.unpivot / SQL UNPIVOT); map-only, pivot's CORR row covers
     # the inverse reshape
     "unpivot_quality_metrics",
-    # nli_training_export — deterministic-split training-pair projection of
-    # the verified triples (the fine-tune feed; map-only over the kg lane
-    # whose CORR rows pin everything upstream)
-    "nli_training_export",
     # cumulative_unique_users — running-distinct growth curve via the
     # first-occurrence-attribution + prefix-sum identity (the combinable
     # re-expression of an uncombinable COUNT(DISTINCT) OVER)
     "cumulative_unique_users",
-    # kg_temporal_facts — Wikidata-qualifier-style temporal scoping of the
-    # verified facts via the triples' (conv_id, turn_idx) provenance join
-    # back to the transcripts' ts column
-    "kg_temporal_facts",
     # funnel_steps — strictly-ordered sequential-pattern funnel (the one
     # ordering-sensitive aggregation shape the set-shaped CORR rows cannot
     # express); same-key join/agg chain, one partitioning reused
     "funnel_steps",
-    # transcript_turn_stats — per-role profile of the north-rule input
-    # table itself (pins the role/tool/ts columns the triples path does
-    # not touch); the plain-groupBy shape is CORR-pinned elsewhere
-    "transcript_turn_stats",
     # cdc_apply_changes — MERGE INTO twin (changelog compaction +
     # upsert/delete apply); the window and full-outer shapes it composes
     # hold CORR rows elsewhere (latest_event_per_user, kg_entities' left
@@ -1018,17 +479,6 @@ _UNREGISTERED = {
     # (the keep policy composing dedup_lsh_clusters + quality_scores, both
     # of which hold the family's CORR rows)
     "dedup_keep_best",
-    # bpe_merges — BPE tokenizer-training merge rounds (Sennrich 2016,
-    # word-level): one corpus-scale counting pass, then Zipf-bounded
-    # vocab-relation rounds with 1-row-broadcast argmax picks; joins the
-    # LM-ops pytest lane (bigram_lm_score / pack_sequences hold the
-    # family's CORR rows)
-    "bpe_merges",
-    # bpe_encode_tokens — the train→apply composition for the tokenizer:
-    # replay the shared _bpe_chain to its final vocabulary and ENCODE the
-    # corpus (per-doc word/BPE-token counts); joins bpe_merges in the
-    # LM-ops pytest lane
-    "bpe_encode_tokens",
     # quantize_embeddings — int8 scalar vector quantization (FAISS-SQ8
     # shape) with per-element reconstruction error; joins the embedding
     # family's pytest lane (kmeans_centroids / ann_ivf_topk hold the CORR
@@ -1038,40 +488,11 @@ _UNREGISTERED = {
     # via the shared Lloyd chain; codes + exact reconstruction error); the
     # embedding family's CORR rows are kmeans_centroids / ann_ivf_topk
     "pq_codes",
-    # sft_pairs — (user → next-assistant) instruction-tuning pair export
-    # with the deterministic hash split (the conversational twin of
-    # nli_training_export, whose map-only-over-kg shape shares the lane);
-    # the window/lead machinery holds CORR rows elsewhere
-    # (latest_event_per_user, scd2's lag/lead)
-    "sft_pairs",
     # dedup_pr_eval — precision/recall of the LSH candidate generator vs
     # the exact-Jaccard ground truth (the banding-config acceptance test;
     # the dedup family's CORR rows pin both inputs); one pair-scale full
     # outer join + one conditional-count agg
     "dedup_pr_eval",
-    # dpo_pairs — DPO preference-pair export: sft_pairs reused verbatim as
-    # the source plus a deterministic in-batch negative (hash-bucketed
-    # ring sampling — constant bucket size, batch count scales with the
-    # corpus); joins sft_pairs in the training-export pytest lane
-    "dpo_pairs",
-    # tool_cooccurrence — order-free same-conversation tool association
-    # (the basket_pairs shape over the north-rule input; the capability-
-    # bundle view beside tool_transitions' ordered Markov view)
-    "tool_cooccurrence",
-    # tool_transitions — first-order Markov transition matrix over tool
-    # invocations (the estimation twin of conv_tool_chain); one
-    # conv-partitioned lead window + combinable pair counts + broadcast
-    # per-tool totals
-    "tool_transitions",
-    # context_tail — token-budget context-window truncation per
-    # conversation (suffix-running-sum window + filter); the running-frame
-    # window shape holds the CORR row via running_user_value
-    "context_tail",
-    # q3_shipping_priority — the second of two J1/J2 join+agg+topN rows
-    # (region_revenue keeps the family's CORR row, topk_per_group the
-    # limit shape); rotated out r5 in favor of pareto_frontier_parts (the
-    # skyline — a genuinely new operator class in the sweep)
-    "q3_shipping_priority",
     # pivot_event_counts — the second of two A6 pivot rows
     # (kg_entity_rollup keeps the family's CORR row); rotated out r5 in
     # favor of bloom_semi_join (the bloom join-pushdown scale technique)
@@ -1176,20 +597,18 @@ _UNREGISTERED = {
     "token_pmi",
 }
 
-# Single source for the sweep-capped queries: name → (spark_fn, sql | None),
-# collected across every family dict. The pytest oracle lane
-# (tests/test_entry_queries.py) and scripts/plan_audit.py both consume THIS
-# mapping, so a new family dict added above cannot silently fall out of
-# either gate (test_every_unregistered_name_is_collected pins completeness).
-# _FAMILIES lists every family dict once, for this mapping and _GATELESS.
+# Every family dict once, in registration order. Each name lands in exactly
+# one of the two maps below: the registered sweep (ALL_QUERIES) or the
+# sweep-capped pytest oracle lane (UNREGISTERED_QUERIES, which
+# tests/test_entry_queries.py and scripts/plan_audit.py consume;
+# test_every_unregistered_name_is_collected pins that every _UNREGISTERED
+# name is collected).
 _FAMILIES = (
     RELATIONAL_QUERIES,
     TEXTOPS_QUERIES,
     ADVANCED_QUERIES,
-    MLOPS_QUERIES,
-    LMOPS_QUERIES,
     DISAMBIG_QUERIES,
-    KG_EXTRA_QUERIES,
+    MLOPS_QUERIES,
 )
 UNREGISTERED_QUERIES: dict[str, tuple] = {
     n: v for d in _FAMILIES for n, v in d.items() if n in _UNREGISTERED
@@ -1197,27 +616,6 @@ UNREGISTERED_QUERIES: dict[str, tuple] = {
 
 ALL_QUERIES: dict[str, tuple] = {
     **KG_QUERIES,
-    **{
-        k: v
-        for k, v in {
-            **RELATIONAL_QUERIES,
-            **TEXTOPS_QUERIES,
-            **ADVANCED_QUERIES,
-            **DISAMBIG_QUERIES,
-            **MLOPS_QUERIES,
-        }.items()
-        if k not in _UNREGISTERED
-    },
+    **{k: v for d in _FAMILIES for k, v in d.items() if k not in _UNREGISTERED},
 }
 assert len(ALL_QUERIES) <= 50, "driver sweep records at most 50 rows"
-
-# Reverse-direction completeness check: every name in every family dict must
-# land in SOME gate — the registered sweep (ALL_QUERIES) or the pytest
-# oracle lane (UNREGISTERED_QUERIES). Without this, a query added to a
-# family dict but forgotten in _UNREGISTERED would silently lose every gate
-# (LMOPS/KG_EXTRA are merged only into the unregistered side, so the <=50
-# assert alone cannot notice).
-_GATELESS = {n for d in _FAMILIES for n in d} - set(ALL_QUERIES) - set(
-    UNREGISTERED_QUERIES
-)
-assert not _GATELESS, f"queries in no gate (register or add to _UNREGISTERED): {_GATELESS}"

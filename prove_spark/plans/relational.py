@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.skew import salted_agg, salted_count_pivot
+from ..operators.skew import salted_agg
 
 
 # Session-scoped cache of table-scan DataFrames (r6). This caches the LAZY
@@ -549,29 +549,6 @@ ORDER BY n_docs DESC, source ASC LIMIT 5
 """
 
 
-# ----------------------------------------------------------------------- A11
-def usage_stats(spark, sf_dir):
-    """count/min/max/avg per type (A11: info.py:101-113)."""
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-        (
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double")
-            / F.count("value")
-        ).alias("avg_value"),
-    )
-
-
-USAGE_SQL = """
-SELECT event_type, COUNT(*) AS n, MIN(value) AS min_value, MAX(value) AS max_value,
-  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) / COUNT(value) AS avg_value
-FROM events GROUP BY event_type
-"""
-
-
-# ------------------------------------------------------------------- O4 + O2
 def union_dedup_parts(spark, sf_dir):
     """unionByName + distinct (O4) over two filtered scans."""
     p = _t(spark, sf_dir, "part")
@@ -680,132 +657,6 @@ FROM events WHERE CAST(json_extract_string(props, '$.k') AS INT) > 50
 """
 
 
-def variant_extract_props(spark, sf_dir):
-    """Semi-structured payloads via Spark 4's VARIANT type: parse_json once
-    into a binary variant column, then typed `variant_get` path extraction —
-    the modern counterpart to [json_extract_props]'s per-field string
-    re-parse. The 100 TB case for VARIANT: parse cost is paid ONCE per row
-    (and at ingest the parsed binary is what you'd store — shredded
-    columnar layout), after which every field access is a cheap binary path
-    walk instead of re-tokenizing the JSON text per extracted field;
-    `try_variant_get` gives NULL (not a crash) on a missing path, the F11
-    error-lane discipline at the type level. Oracle: the same values via
-    DuckDB's JSON extraction."""
-    e = _t(spark, sf_dir, "events")
-    # r6: same explode-barrier as json_extract_props, here protecting the
-    # ONCE-per-row parse_json — the filter on the derived `k` would
-    # otherwise inline variant_get(parse_json(props)) as a second (and the
-    # missing_k projection a third) full parse of the payload.
-    v = e.select(
-        "event_id", F.explode(F.array(F.parse_json("props"))).alias("v")
-    )
-    return v.select(
-        "event_id",
-        F.variant_get(F.col("v"), "$.k", "int").alias("k"),
-        F.try_variant_get(F.col("v"), "$.missing", "int").alias("missing_k"),
-    ).where(F.col("k") > 50)
-
-
-VARIANT_SQL = """
-SELECT event_id,
-       CAST(json_extract_string(props, '$.k') AS INT) AS k,
-       CAST(json_extract_string(props, '$.missing') AS INT) AS missing_k
-FROM events WHERE CAST(json_extract_string(props, '$.k') AS INT) > 50
-"""
-
-
-def profile_events(spark, sf_dir):
-    """Single-pass column profiling — the DESCRIBE/data-quality sweep a
-    warehouse runs after every load: per-column null count, exact distinct
-    count, and min/max, all computed in ONE scan (one wide agg, then
-    `stack` to the long row-per-column shape; the multiple exact distincts
-    become one Expand-based aggregate, still a single pass over the data —
-    at 100 TB swap countDistinct for approx_count_distinct/HLL per the
-    [hll_user_counts] row). Min/max stay in TYPED lanes (numeric vs string
-    vs formatted timestamp) — rendering a raw double to text differs
-    between engines and would break hash parity for no semantic gain."""
-    e = _t(spark, sf_dir, "events")
-    num_cols = ["event_id", "user_id", "value"]
-    str_cols = ["event_type"]
-    aggs = [F.count("*").alias("_n")]
-    for c in num_cols + str_cols + ["ts"]:
-        aggs += [
-            # COUNT(*) - COUNT(c) is the null count and stays BIGINT in
-            # both engines (a SUM(CASE..) rides DuckDB's HUGEINT into
-            # pandas float64 and breaks dtype parity)
-            (F.count("*") - F.count(c)).alias(f"{c}__nulls"),
-            F.countDistinct(c).alias(f"{c}__distinct"),
-        ]
-    for c in num_cols:
-        aggs += [
-            F.min(c).cast("double").alias(f"{c}__min_num"),
-            F.max(c).cast("double").alias(f"{c}__max_num"),
-        ]
-    for c in str_cols:
-        aggs += [F.min(c).alias(f"{c}__min_str"), F.max(c).alias(f"{c}__max_str")]
-    aggs += [
-        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("ts__min_str"),
-        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("ts__max_str"),
-    ]
-    wide = e.agg(*aggs)
-
-    def lane(c: str) -> str:
-        mn = f"{c}__min_num" if c in num_cols else "CAST(NULL AS DOUBLE)"
-        mx = f"{c}__max_num" if c in num_cols else "CAST(NULL AS DOUBLE)"
-        ms = f"{c}__min_str" if c not in num_cols else "CAST(NULL AS STRING)"
-        xs = f"{c}__max_str" if c not in num_cols else "CAST(NULL AS STRING)"
-        return (
-            f"'{c}', {c}__nulls, {c}__distinct, {mn}, {mx}, {ms}, {xs}"
-        )
-
-    all_cols = num_cols + str_cols + ["ts"]
-    stack = ", ".join(lane(c) for c in all_cols)
-    return wide.selectExpr(
-        "_n AS n_rows",
-        f"stack({len(all_cols)}, {stack}) AS "
-        "(col_name, n_nulls, n_distinct, min_num, max_num, min_str, max_str)",
-    ).select(
-        "col_name", "n_rows", "n_nulls", "n_distinct",
-        "min_num", "max_num", "min_str", "max_str",
-    )
-
-
-PROFILE_SQL = """
-WITH w AS (
-  SELECT COUNT(*) AS n_rows,
-    COUNT(*) - COUNT(event_id) AS id_nulls,
-    COUNT(DISTINCT event_id) AS id_distinct,
-    CAST(MIN(event_id) AS DOUBLE) AS id_min, CAST(MAX(event_id) AS DOUBLE) AS id_max,
-    COUNT(*) - COUNT(user_id) AS u_nulls,
-    COUNT(DISTINCT user_id) AS u_distinct,
-    CAST(MIN(user_id) AS DOUBLE) AS u_min, CAST(MAX(user_id) AS DOUBLE) AS u_max,
-    COUNT(*) - COUNT(value) AS v_nulls,
-    COUNT(DISTINCT value) AS v_distinct,
-    CAST(MIN(value) AS DOUBLE) AS v_min, CAST(MAX(value) AS DOUBLE) AS v_max,
-    COUNT(*) - COUNT(event_type) AS t_nulls,
-    COUNT(DISTINCT event_type) AS t_distinct,
-    MIN(event_type) AS t_min, MAX(event_type) AS t_max,
-    COUNT(*) - COUNT(ts) AS s_nulls,
-    COUNT(DISTINCT ts) AS s_distinct,
-    STRFTIME(MIN(ts), '%Y-%m-%d %H:%M:%S') AS s_min,
-    STRFTIME(MAX(ts), '%Y-%m-%d %H:%M:%S') AS s_max
-  FROM events
-)
-SELECT u.* FROM w, LATERAL (VALUES
-  ('event_id',  n_rows, id_nulls, id_distinct, id_min, id_max,
-   CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)),
-  ('user_id',   n_rows, u_nulls, u_distinct, u_min, u_max,
-   CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)),
-  ('value',     n_rows, v_nulls, v_distinct, v_min, v_max,
-   CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)),
-  ('event_type', n_rows, t_nulls, t_distinct, CAST(NULL AS DOUBLE),
-   CAST(NULL AS DOUBLE), t_min, t_max),
-  ('ts',        n_rows, s_nulls, s_distinct, CAST(NULL AS DOUBLE),
-   CAST(NULL AS DOUBLE), s_min, s_max)
-) AS u(col_name, n_rows, n_nulls, n_distinct, min_num, max_num, min_str, max_str)
-"""
-
-
 # ------------------------------------------------------------------ C10/C13
 def timestamp_functions(spark, sf_dir):
     """Timestamp parse/format + hour extraction (C10/C13)."""
@@ -906,152 +757,7 @@ FROM events GROUP BY event_type
 """
 
 
-def salted_pivot_counts(spark, sf_dir):
-    """Salted pivot-count path used by the KG entity rollup (A6 at scale)."""
-    e = _t(spark, sf_dir, "events")
-    return salted_count_pivot(
-        e,
-        key="user_id",
-        pivot_col="event_type",
-        pivot_values=["click", "purchase"],
-        aliases=["n_click", "n_purchase"],
-    )
-
-
-SALTED_PIVOT_SQL = """
-SELECT user_id,
-  COUNT(*) FILTER (event_type = 'click') AS n_click,
-  COUNT(*) FILTER (event_type = 'purchase') AS n_purchase
-FROM events GROUP BY user_id
-"""
-
-
-# -------------------------------------------------- TPC-H classics (Q3/10/18)
-def q3_shipping_priority(spark, sf_dir):
-    """TPC-H Q3 shape: 3-way join + filtered date band + top-10 revenue.
-    Catalyst broadcast-joins customer (small) and pushes both date filters
-    to the scans."""
-    cutoff = "1998-03-15"
-    c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") < cutoff)
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > cutoff)
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, F.col("o_orderkey") == li.l_orderkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
-Q3_SQL = """
-SELECT o_orderkey, o_orderdate, o_orderpriority,
-  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-FROM customer JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-03-15'
-  AND l_shipdate > TIMESTAMP '1998-03-15'
-GROUP BY o_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, o_orderkey ASC
-LIMIT 10
-"""
-
-
-def q10_returned_items(spark, sf_dir):
-    """TPC-H Q10 shape: returned-item revenue per customer (+nation), top 20."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, F.col("o_orderkey") == li.l_orderkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name", "c_acctbal")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-Q10_SQL = """
-SELECT c_custkey, c_name, n_name, c_acctbal,
-  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-FROM customer JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-GROUP BY c_custkey, c_name, n_name, c_acctbal
-ORDER BY revenue DESC, c_custkey ASC
-LIMIT 20
-"""
-
-
-def q18_large_orders(spark, sf_dir):
-    """TPC-H Q18 shape: HAVING-filtered subaggregate (large-quantity orders)
-    semi-joined back to the fact — aggregate-then-join, never join-then-
-    re-aggregate."""
-    li = _t(spark, sf_dir, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(_dec_sum("l_quantity", "total_qty"))
-        .where(F.col("total_qty") > 250)
-    )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    return (
-        big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_custkey",
-            "c_name",
-            "o_orderkey",
-            "o_orderdate",
-            "o_totalprice",
-            "total_qty",
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(100)
-    )
-
-
-Q18_SQL = """
-SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
-FROM (
-  SELECT l_orderkey,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS total_qty
-  FROM lineitem GROUP BY l_orderkey
-  HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) > 250
-) big
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY o_totalprice DESC, o_orderkey ASC
-LIMIT 100
-"""
-
-
 RELATIONAL_QUERIES: dict[str, tuple] = {
-    "q3_shipping_priority": (q3_shipping_priority, Q3_SQL),
-    "q10_returned_items": (q10_returned_items, Q10_SQL),
-    "q18_large_orders": (q18_large_orders, Q18_SQL),
     "q1_pricing_summary": (q1_pricing_summary, Q1_SQL),
     "region_revenue": (region_revenue, REGION_REVENUE_SQL),
     "semi_join_high_value": (semi_join_high_value, SEMI_JOIN_SQL),
@@ -1064,16 +770,12 @@ RELATIONAL_QUERIES: dict[str, tuple] = {
     "pivot_event_counts": (pivot_event_counts, PIVOT_SQL),
     "single_occurrence_users": (single_occurrence_users, SINGLE_OCC_SQL),
     "top_sources_by_docs": (top_sources_by_docs, TOP_SOURCES_SQL),
-    "usage_stats": (usage_stats, USAGE_SQL),
     "union_dedup_parts": (union_dedup_parts, UNION_SQL),
     "running_user_value": (running_user_value, RUNNING_SQL),
     "sessionize_events": (sessionize_events, SESSIONIZE_SQL),
     "json_extract_props": (json_extract_props, JSON_SQL),
-    "variant_extract_props": (variant_extract_props, VARIANT_SQL),
-    "profile_events": (profile_events, PROFILE_SQL),
     "timestamp_functions": (timestamp_functions, TS_SQL),
     "coalesce_preference_chain": (coalesce_preference_chain, COALESCE_SQL),
     "rollup_order_stats": (rollup_order_stats, ROLLUP_SQL),
     "salted_event_counts": (salted_event_counts, SALTED_AGG_SQL),
-    "salted_pivot_counts": (salted_pivot_counts, SALTED_PIVOT_SQL),
 }

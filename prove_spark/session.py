@@ -19,6 +19,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def graft_cpus() -> int:
+    """Core count from SPARK_GRAFT_CPUS (default 32); a value that is not a
+    positive integer raises a ValueError naming the variable."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        cores = int(raw)
+    except ValueError:
+        cores = 0
+    if cores < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return cores
+
+
 def get_spark(
     app_name: str = "prove_spark",
     master: str | None = None,
@@ -40,15 +53,7 @@ def get_spark(
     ValueError naming the variable before any JVM or session is touched.
     """
     if master is None or shuffle_partitions is None:
-        raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        try:
-            cores = int(raw)
-        except ValueError:
-            cores = 0
-        if cores < 1:
-            raise ValueError(
-                f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
-            )
+        cores = graft_cpus()
         if master is None:
             master = f"local[{cores}]"
         if shuffle_partitions is None:

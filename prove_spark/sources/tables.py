@@ -1,9 +1,10 @@
 """Lakehouse table layer: Iceberg when available, parquet fallback.
 
-The production design (BASELINE.json) materializes `triples` / `entities` /
-`run_status` / `stage_metrics` as Iceberg v2 tables and resumes from
-snapshot-pinned manifests. The Iceberg runtime jar is not in this sandbox,
-so TableIO transparently degrades to directory-per-table parquet with the
+The job (pipeline/checkpoint.py) writes its `triples`, `entities` and
+`manifest` tables through TableIO; the production design (BASELINE.json)
+keeps them as Iceberg v2 tables and resumes from the manifest's per-bucket
+input fingerprints. Without the Iceberg runtime jar on the classpath,
+TableIO transparently degrades to directory-per-table parquet with the
 same write semantics we rely on for resume: idempotent per-bucket overwrite
 (dynamic partition overwrite ≈ Iceberg REPLACE PARTITIONS).
 
@@ -205,29 +206,6 @@ class TableIO:
             )
             for b in buckets
         ]
-
-
-def save_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    database: str | None = None,
-) -> str:
-    """Persist a table BUCKETED by join key (Hive-style bucketing via the
-    session catalog): two tables bucketed the same way join with ZERO
-    exchanges — the co-located-join layout for repeatedly-joined fact tables
-    at 100 TB (e.g. triples ⋈ evidence on claim_id). Returns the qualified
-    table name."""
-    qualified = f"{database}.{table}" if database else table
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .format("parquet")
-        .saveAsTable(qualified)
-    )
-    return qualified
 
 
 def with_bucket(df: DataFrame, col: str = "conv_id", n_buckets: int = 32) -> DataFrame:

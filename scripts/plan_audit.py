@@ -53,28 +53,18 @@ ALLOWED: dict[str, tuple[str, int]] = {
     "heavy_hitter_tokens": ("BroadcastNestedLoopJoin", 1),  # 1-row total
     # 1-row weight-sum + feasible-total broadcasts in counts/quota
     "mixture_resample": ("BroadcastNestedLoopJoin", 3),
-    # 1-row vocabulary-size broadcast in the smoothing denominator
-    "bigram_lm_score": ("BroadcastNestedLoopJoin", 1),
     # 1-row corpus-size broadcast feeding the df band filter: the banded
     # relation is consumed by BOTH sides of the pair self-join, so the one
     # logical crossJoin prints as two physical instances
     "token_pmi": ("BroadcastNestedLoopJoin", 2),
-    # same 1-row vocab broadcast, riding in via the composed bigram score
-    "curriculum_bins": ("BroadcastNestedLoopJoin", 1),
     # 1-row (min,max) price-range broadcast feeding width_bucket; the
     # bucketed relation is consumed by the group pass AND the row-level
     # join-back, so the one logical crossJoin prints as three physical
     # instances in the re-expanded plan string
     "pareto_frontier_parts": ("BroadcastNestedLoopJoin", 3),
-    # per-round 1-row best-pair × 1-row round-stats crossJoin assembling
-    # the emitted merge table (one instance per BPE round; the vocab-chain
-    # crossJoins are lineage-truncated away and never reach the final plan)
-    "bpe_merges": ("BroadcastNestedLoopJoin", 8),
     # the 1-row bloom-bitset broadcast crossJoin — the operator's entire
     # point (map-side probe pruning before the join shuffle)
     "bloom_semi_join": ("BroadcastNestedLoopJoin", 1),
-    # 1-row pair-count broadcast feeding the in-batch bucket arithmetic
-    "dpo_pairs": ("BroadcastNestedLoopJoin", 1),
     # 1-row subspace-split-point broadcast feeding each encoder slice (the
     # two final assignment slices re-expand it in the plan string)
     "pq_codes": ("BroadcastNestedLoopJoin", 3),
@@ -89,9 +79,6 @@ ALLOWED: dict[str, tuple[str, int]] = {
     # brute-force truth leg (ann_topk_cosine reused verbatim); its two
     # consumers (hit join + k_true rollup) re-expand it twice in the plan
     "ann_recall_eval": ("BroadcastNestedLoopJoin", 2),
-    # 1-row conversation-count broadcast feeding the lift denominator
-    # (the basket_pairs waiver's transcript twin)
-    "tool_cooccurrence": ("BroadcastNestedLoopJoin", 1),
 }
 
 

@@ -9,12 +9,14 @@ import json
 import os
 import shutil
 import subprocess
+import sys
 
 from prove_spark.datagen import transcripts_df
 from prove_spark.job import main
 from prove_spark.sources.jsonl import write_transcripts_jsonl
 from prove_spark.sources.tables import TableIO
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TRIPLE_KEY_COLS = ["conv_id", "claim_id", "subj", "pred", "obj"]
 
 
@@ -125,3 +127,23 @@ def test_job_via_spark_submit_py_files(spark, tmp_path):
     src = transcripts_df(spark, "/root/testdata/sf0.001")
     assert stats["n_triples"] == build_triples(spark, src).count()
     assert len(_triples(spark, wh)) == stats["n_triples"]
+
+
+def test_job_path_imports_no_query_module():
+    """The job and its checkpoint/run layers never load a `prove_spark.plans`
+    module, so the query families cannot change what the job runs."""
+    code = (
+        "import sys\n"
+        "import prove_spark.job, prove_spark.pipeline.checkpoint, "
+        "prove_spark.pipeline.run\n"
+        "print(sorted(m for m in sys.modules if m.startswith('prove_spark.plans')))\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO_ROOT,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip() == "[]"
