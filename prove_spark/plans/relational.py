@@ -549,6 +549,29 @@ ORDER BY n_docs DESC, source ASC LIMIT 5
 """
 
 
+# ----------------------------------------------------------------------- A11
+def usage_stats(spark, sf_dir):
+    """count/min/max/avg per type (A11: info.py:101-113)."""
+    e = _t(spark, sf_dir, "events")
+    return e.groupBy("event_type").agg(
+        F.count("*").alias("n"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
+        (
+            F.sum(F.col("value").cast("decimal(18,4)")).cast("double")
+            / F.count("value")
+        ).alias("avg_value"),
+    )
+
+
+USAGE_SQL = """
+SELECT event_type, COUNT(*) AS n, MIN(value) AS min_value, MAX(value) AS max_value,
+  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) / COUNT(value) AS avg_value
+FROM events GROUP BY event_type
+"""
+
+
+# ------------------------------------------------------------------- O4 + O2
 def union_dedup_parts(spark, sf_dir):
     """unionByName + distinct (O4) over two filtered scans."""
     p = _t(spark, sf_dir, "part")
@@ -757,7 +780,132 @@ FROM events GROUP BY event_type
 """
 
 
+# -------------------------------------------------- TPC-H classics (Q3/10/18)
+def q3_shipping_priority(spark, sf_dir):
+    """TPC-H Q3 shape: 3-way join + filtered date band + top-10 revenue.
+    Catalyst broadcast-joins customer (small) and pushes both date filters
+    to the scans."""
+    cutoff = "1998-03-15"
+    c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
+    o = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") < cutoff)
+    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > cutoff)
+    return (
+        c.join(o, c.c_custkey == o.o_custkey)
+        .join(li, F.col("o_orderkey") == li.l_orderkey)
+        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
+        .agg(
+            F.sum(
+                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
+                    "decimal(18,4)"
+                )
+            )
+            .cast("double")
+            .alias("revenue")
+        )
+        .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
+        .limit(10)
+    )
+
+
+Q3_SQL = """
+SELECT o_orderkey, o_orderdate, o_orderpriority,
+  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+FROM customer JOIN orders ON c_custkey = o_custkey
+JOIN lineitem ON o_orderkey = l_orderkey
+WHERE c_mktsegment = 'BUILDING'
+  AND o_orderdate < TIMESTAMP '1998-03-15'
+  AND l_shipdate > TIMESTAMP '1998-03-15'
+GROUP BY o_orderkey, o_orderdate, o_orderpriority
+ORDER BY revenue DESC, o_orderkey ASC
+LIMIT 10
+"""
+
+
+def q10_returned_items(spark, sf_dir):
+    """TPC-H Q10 shape: returned-item revenue per customer (+nation), top 20."""
+    c = _t(spark, sf_dir, "customer")
+    n = _t(spark, sf_dir, "nation")
+    o = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    return (
+        c.join(o, c.c_custkey == o.o_custkey)
+        .join(li, F.col("o_orderkey") == li.l_orderkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .groupBy("c_custkey", "c_name", "n_name", "c_acctbal")
+        .agg(
+            F.sum(
+                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
+                    "decimal(18,4)"
+                )
+            )
+            .cast("double")
+            .alias("revenue")
+        )
+        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
+        .limit(20)
+    )
+
+
+Q10_SQL = """
+SELECT c_custkey, c_name, n_name, c_acctbal,
+  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+FROM customer JOIN orders ON c_custkey = o_custkey
+JOIN lineitem ON o_orderkey = l_orderkey
+JOIN nation ON c_nationkey = n_nationkey
+WHERE l_returnflag = 'R'
+GROUP BY c_custkey, c_name, n_name, c_acctbal
+ORDER BY revenue DESC, c_custkey ASC
+LIMIT 20
+"""
+
+
+def q18_large_orders(spark, sf_dir):
+    """TPC-H Q18 shape: HAVING-filtered subaggregate (large-quantity orders)
+    semi-joined back to the fact — aggregate-then-join, never join-then-
+    re-aggregate."""
+    li = _t(spark, sf_dir, "lineitem")
+    big = (
+        li.groupBy("l_orderkey")
+        .agg(_dec_sum("l_quantity", "total_qty"))
+        .where(F.col("total_qty") > 250)
+    )
+    o = _t(spark, sf_dir, "orders")
+    c = _t(spark, sf_dir, "customer")
+    return (
+        big.join(o, big.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .select(
+            "c_custkey",
+            "c_name",
+            "o_orderkey",
+            "o_orderdate",
+            "o_totalprice",
+            "total_qty",
+        )
+        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
+        .limit(100)
+    )
+
+
+Q18_SQL = """
+SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
+FROM (
+  SELECT l_orderkey,
+         CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS total_qty
+  FROM lineitem GROUP BY l_orderkey
+  HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) > 250
+) big
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+ORDER BY o_totalprice DESC, o_orderkey ASC
+LIMIT 100
+"""
+
+
 RELATIONAL_QUERIES: dict[str, tuple] = {
+    "q3_shipping_priority": (q3_shipping_priority, Q3_SQL),
+    "q10_returned_items": (q10_returned_items, Q10_SQL),
+    "q18_large_orders": (q18_large_orders, Q18_SQL),
     "q1_pricing_summary": (q1_pricing_summary, Q1_SQL),
     "region_revenue": (region_revenue, REGION_REVENUE_SQL),
     "semi_join_high_value": (semi_join_high_value, SEMI_JOIN_SQL),
@@ -770,6 +918,7 @@ RELATIONAL_QUERIES: dict[str, tuple] = {
     "pivot_event_counts": (pivot_event_counts, PIVOT_SQL),
     "single_occurrence_users": (single_occurrence_users, SINGLE_OCC_SQL),
     "top_sources_by_docs": (top_sources_by_docs, TOP_SOURCES_SQL),
+    "usage_stats": (usage_stats, USAGE_SQL),
     "union_dedup_parts": (union_dedup_parts, UNION_SQL),
     "running_user_value": (running_user_value, RUNNING_SQL),
     "sessionize_events": (sessionize_events, SESSIONIZE_SQL),
