@@ -84,7 +84,7 @@ def test_job_via_spark_submit_py_files(spark, tmp_path):
     zip_path = shutil.make_archive(
         str(tmp_path / "prove_spark_pkg"),
         "zip",
-        root_dir="/root/repo",
+        root_dir=REPO_ROOT,
         base_dir="prove_spark",
     )
     launcher = tmp_path / "launch.py"

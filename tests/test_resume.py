@@ -226,32 +226,28 @@ def test_whole_input_manifest_resumes(spark, spark_transcripts, tmp_path):
     assert _latest_fingerprints(io) == input_fingerprint(spark_transcripts, 32)
 
 
-def test_incremental_update_deletes_emptied_bucket(spark, spark_transcripts, tmp_path):
+def test_incremental_update_deletes_emptied_bucket(
+    spark, spark_transcripts, golden_triples, tmp_path
+):
     """A recomputed bucket that now yields zero rows must lose its stale
     partition (dynamic overwrite alone would leave it behind)."""
     from prove_spark.pipeline.checkpoint import incremental_update
     from prove_spark.sources.tables import with_bucket
 
-    # a handful of convs so most sit alone in their bucket; then delete one
-    # that (a) produced triples and (b) shares its bucket with no other conv
-    some = spark_transcripts.select("conv_id").distinct().limit(12)
-    t0 = spark_transcripts.join(some, "conv_id")
+    # the victim produces triples and shares its bucket with none of the
+    # other conversations picked, so deleting it empties that bucket
+    bucket_of = {
+        r.conv_id: r.bucket
+        for r in with_bucket(spark_transcripts.select("conv_id").distinct(), "conv_id", 32)
+        .collect()
+    }
+    victim = min(golden_triples.conv_id)
+    vbucket = bucket_of[victim]
+    others = sorted(c for c, b in bucket_of.items() if b != vbucket)[:11]
+    t0 = spark_transcripts.where(F.col("conv_id").isin([victim, *others]))
     wh = str(tmp_path / "incr_del")
     full = run_checkpointed(spark, t0, wh)
-    bucket_convs = (
-        with_bucket(t0.select("conv_id").distinct(), "conv_id", 32)
-        .groupBy("bucket")
-        .agg(F.collect_set("conv_id").alias("cs"))
-        .collect()
-    )
-    triple_buckets = {r.bucket for r in full.select("bucket").distinct().collect()}
-    lone = next(
-        (r for r in bucket_convs if len(r.cs) == 1 and r.bucket in triple_buckets),
-        None,
-    )
-    if lone is None:
-        pytest.skip("no lone-conversation bucket with triples in this draw")
-    victim, vbucket = lone.cs[0], lone.bucket
+    assert vbucket in {r.bucket for r in full.select("bucket").distinct().collect()}
 
     t1 = t0.where(F.col("conv_id") != victim)
     changed = spark.createDataFrame([(victim,)], "conv_id string")
@@ -261,6 +257,7 @@ def test_incremental_update_deletes_emptied_bucket(spark, spark_transcripts, tmp
     }
     import os
 
+    assert os.path.isdir(f"{wh}/triples")
     assert not os.path.exists(f"{wh}/triples/bucket={vbucket}")
 
 
